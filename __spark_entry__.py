@@ -7,6 +7,7 @@ oracle_sql()  -> DuckDB-equivalent SQL per query (value-level gate).
 
 from __future__ import annotations
 
+import importlib
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -88,13 +89,8 @@ def _registry() -> dict[str, tuple]:
         "queries_quality",
         "queries_final",
     ):
-        try:
-            import importlib
-
-            m = importlib.import_module(f"ocr_dataset_builder_spark.{mod}")
-            reg.update(m.QUERIES)
-        except ImportError:
-            pass
+        m = importlib.import_module(f"ocr_dataset_builder_spark.{mod}")
+        reg.update(m.QUERIES)
     ordered: dict[str, tuple] = {}
     for name in _PRIORITY:
         if name in reg:

@@ -117,19 +117,6 @@ def word_ngrams(t: F.Column, n: int) -> F.Column:
     return F.array_distinct(positional_ngrams(t, n))
 
 
-def _maybe_persist(df: DataFrame, storage_level) -> DataFrame:
-    """Persist with a StorageLevel or its name ('MEMORY_AND_DISK', ...);
-    None is a no-op (the driver contract compares pure transformations,
-    so persistence is opt-in for pipeline callers)."""
-    if storage_level is None:
-        return df
-    if isinstance(storage_level, str):
-        from pyspark import StorageLevel
-
-        storage_level = getattr(StorageLevel, storage_level)
-    return df.persist(storage_level)
-
-
 def _spread(df: DataFrame, *cols: str, force: bool = False) -> DataFrame:
     """Hash-repartition to the session's shuffle-partition count before a
     CPU-heavy scan-local computation (round 8, guide §2.5/§6).
@@ -146,20 +133,14 @@ def _spread(df: DataFrame, *cols: str, force: bool = False) -> DataFrame:
     linear in the relation while the folds it parallelizes are
     O(n*k*dim), so it also holds at the driver's larger scale factors."""
     n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    if not force:
-        try:
-            # Scale guard: only add the exchange when the input is
-            # actually under-parallel (tiny files, one row group -> one
-            # task). A real 100 TB scan already carries >>
-            # shuffle-partition splits and must NOT pay an extra
-            # full-payload shuffle; a localCheckpoint barrier relation
-            # already carries the session's shuffle partitioning and
-            # skips too. getNumPartitions is plan-time introspection —
-            # no job runs.
-            if df.rdd.getNumPartitions() >= n:
-                return df
-        except Exception:
-            pass
+    # Scale guard: only add the exchange when the input is actually
+    # under-parallel (tiny files, one row group -> one task). A real
+    # 100 TB scan already carries >> shuffle-partition splits and must
+    # NOT pay an extra full-payload shuffle; a _barrier relation already
+    # carries the session's shuffle partitioning and skips too.
+    # getNumPartitions is plan-time introspection — no job runs.
+    if not force and df.rdd.getNumPartitions() >= n:
+        return df
     # force=True PINS a keyed layout a downstream CPU-dense join/agg
     # needs: a numbered user repartition is the one exchange AQE's
     # byte-based coalescing will not collapse to a single partition
@@ -169,25 +150,22 @@ def _spread(df: DataFrame, *cols: str, force: bool = False) -> DataFrame:
 
 
 def _barrier(df: DataFrame) -> DataFrame:
-    """Lazy in-plan materialization barrier (localCheckpoint(eager=False))
-    for a subtree the surrounding plan references more than once — Spark
-    has no common-subtree materialization, so without it one action
-    re-executes the subtree per reference (measured: the incremental
-    arrival kernels ran 3x/2x, r7; the semantic assignment 3-4x, r8).
+    """The package's one materialization policy: an eager checkpoint of
+    a relation the downstream plan reads more than once. Spark has no
+    common-subtree materialization, so without it one action re-executes
+    the subtree per reference (measured: the incremental arrival kernels
+    ran 3x/2x, r7; the semantic assignment 3-4x, r8), and an iterative
+    loop grows a lineage the optimizer re-expands every round.
 
-    Gated by $SPARK_GRAFT_PLAN_BARRIERS (default on) per ADVICE r7:
-    local checkpoints store blocks on executors only, so on a real
-    cluster with dynamic allocation / preemptible executors a lost
-    executor fails the job instead of recomputing, and checkpointed
-    blocks live until driver GC. Long-running cluster sessions that
-    prefer recomputability (or persist these boundaries to real tables,
-    as a production pipeline would) set SPARK_GRAFT_PLAN_BARRIERS=0 and
-    get the pure-plan form; results are identical either way."""
-    import os as _os
-
-    if _os.environ.get("SPARK_GRAFT_PLAN_BARRIERS", "1") == "0":
-        return df
-    return df.localCheckpoint(eager=False)
+    Reliable (``df.checkpoint()``) when the session carries a checkpoint
+    dir (``spark.sparkContext.setCheckpointDir``) — the blocks then
+    survive executor loss; executor-local (``df.localCheckpoint()``)
+    otherwise. Eager, so the materializing job runs here, once, and not
+    inside whichever later job first reads the relation (the lazy form
+    logged ``DAGScheduler: Failed to update accumulator`` errors)."""
+    if df.sparkSession.sparkContext.getCheckpointDir() is None:
+        return df.localCheckpoint()
+    return df.checkpoint()
 
 
 def _nearest_ranked(d2: DataFrame, rank_max: int) -> DataFrame:
@@ -531,10 +509,7 @@ _CC_MAX_ITERS = 25
 
 
 def q_near_dup_components(
-    spark: SparkSession,
-    sf_dir: str,
-    sh: DataFrame | None = None,
-    use_reliable_checkpoint: bool = False,
+    spark: SparkSession, sf_dir: str, sh: DataFrame | None = None
 ) -> DataFrame:
     """Near-duplicate CLUSTERS: connected components over the MinHash-LSH
     candidate pairs — the step that turns pairwise hits into dedup groups
@@ -543,19 +518,15 @@ def q_near_dup_components(
     Spark shape: iterative min-label propagation (each pass = one join +
     one groupBy on the edge relation; converges in graph-diameter passes,
     which for near-dup clusters is small). Each iteration is
-    localCheckpoint-ed so the plan/lineage stays flat. The DuckDB oracle
+    checkpointed (_barrier) so the plan/lineage stays flat. The DuckDB oracle
     is a recursive CTE computing the same min-reachable label.
     """
     edges = q_minhash_lsh(spark, sf_dir, sh=sh).select("a_id", "b_id")
-    return connected_components(
-        edges, use_reliable_checkpoint=use_reliable_checkpoint
-    )
+    return connected_components(edges)
 
 
 def connected_components(
-    edges: DataFrame,
-    max_iters: int = _CC_MAX_ITERS,
-    use_reliable_checkpoint: bool = False,
+    edges: DataFrame, max_iters: int = _CC_MAX_ITERS
 ) -> DataFrame:
     """Min-label propagation + pointer jumping over an undirected edge
     list (a_id, b_id). Returns (doc_id, comp) for every endpoint,
@@ -567,29 +538,13 @@ def connected_components(
     loop silently mislabels any component whose diameter exceeds the
     iteration cap; here the cap is a loud RuntimeError backstop).
 
-    Checkpointing keeps lineage flat across iterations. Default is
-    localCheckpoint (executor-local blocks — cheapest, fine on a
-    single-JVM or short job); ``use_reliable_checkpoint=True`` writes
-    each iteration's labels to the session's checkpoint dir
-    (``spark.sparkContext.setCheckpointDir``) so a long CC run survives
-    executor loss instead of recomputing the whole iteration chain —
-    the right knob on a 1000-executor cluster."""
-
-    def _ckpt(df: DataFrame) -> DataFrame:
-        if use_reliable_checkpoint:
-            sc = df.sparkSession.sparkContext
-            if sc._jsc.sc().getCheckpointDir().isEmpty():
-                raise ValueError(
-                    "use_reliable_checkpoint=True requires "
-                    "spark.sparkContext.setCheckpointDir(...) to be set"
-                )
-            return df.checkpoint()
-        return df.localCheckpoint()
-
+    Each iteration's labels pass through _barrier, which keeps lineage
+    flat across iterations (and writes to the session's checkpoint dir
+    when one is set, so a long CC run survives executor loss)."""
     sym = edges.unionByName(
         edges.select(F.col("b_id").alias("a_id"), F.col("a_id").alias("b_id"))
     ).persist()
-    labels = _ckpt(
+    labels = _barrier(
         sym.select(F.col("a_id").alias("doc_id"))
         .distinct()
         .withColumn("comp", F.col("doc_id"))
@@ -607,14 +562,10 @@ def connected_components(
             ).alias("comp"),
             labels["comp"].alias("_old"),
         )
-        if not use_reliable_checkpoint:
-            # stepped feeds BOTH the pointer-jump parent projection and
-            # the join's left side — a lazy barrier stops the neighbor-
-            # min join running twice per iteration (r8). Reliable mode
-            # keeps the pure plan: a mid-chain localCheckpoint would
-            # undo the recompute-after-executor-loss contract the
-            # caller asked for.
-            stepped = _barrier(stepped)
+        # stepped feeds BOTH the pointer-jump parent projection and the
+        # join's left side — the barrier stops the neighbor-min join
+        # running twice per iteration (r8)
+        stepped = _barrier(stepped)
         # pointer jump: follow the label one hop (label table joined on
         # itself) — halves the remaining path length every iteration
         parent = stepped.select(
@@ -625,7 +576,7 @@ def connected_components(
         # detecting a fixed point is a filter+limit over the stored
         # blocks — the previous form re-joined new vs old labels and
         # full-counted the diff, a whole extra join job per iteration
-        new_labels = _ckpt(
+        new_labels = _barrier(
             stepped.join(parent, "comp", "left").select(
                 "doc_id",
                 F.least(
@@ -750,12 +701,7 @@ FROM bsz GROUP BY band_id
 SQL_NEAR_DUP_COMPONENTS = _cc_sql()
 
 
-def q_dedup_corpus(
-    spark: SparkSession,
-    sf_dir: str,
-    storage_level=None,
-    use_reliable_checkpoint: bool = False,
-) -> DataFrame:
+def q_dedup_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The end-user dedup operation: the corpus with one canonical doc
     per duplicate group — exact groups (md5 fingerprint) collapse first,
     then near-dup clusters (LSH connected components) collapse to their
@@ -763,19 +709,11 @@ def q_dedup_corpus(
     the min over members, which is therefore also its exact group's
     canonical, so it always survives both filters (identical docs share
     all band buckets, so an exact group enters/leaves the near graph as
-    a unit).
-
-    ``storage_level`` persists the normalized corpus, which BOTH legs
-    (exact fingerprints and the shingle->LSH chain) read — one corpus
-    scan instead of two; ``use_reliable_checkpoint`` makes the CC
-    iterations survivable on a real cluster (see connected_components)."""
-    nd = _maybe_persist(_norm_docs(spark, sf_dir), storage_level)
+    a unit)."""
+    nd = _norm_docs(spark, sf_dir)
     exact_keep = _exact_canonicals(nd)
     comps = q_near_dup_components(
-        spark,
-        sf_dir,
-        sh=_shingles(spark, sf_dir, nd=nd),
-        use_reliable_checkpoint=use_reliable_checkpoint,
+        spark, sf_dir, sh=_shingles(spark, sf_dir, nd=nd)
     )
     return (
         exact_keep.join(comps, "doc_id", "left")
@@ -801,25 +739,14 @@ WHERE c.comp IS NULL OR c.comp = e.doc_id
 SQL_DEDUP_CORPUS = _dedup_corpus_sql()
 
 
-def q_minhash_jaccard_verify(
-    spark: SparkSession, sf_dir: str, storage_level=None
-) -> DataFrame:
+def q_minhash_jaccard_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Composed near-dup entry point for text at scale: candidate pairs
     from MinHash-LSH buckets, exact n-gram Jaccard computed ONLY on the
     candidates (two key-joins against the shingle relation, each linear in
     candidates x shingles-per-doc) — never the all-pairs shingle self-join
-    that q_ngram_jaccard uses as its tiny-scale oracle form.
-
-    ``storage_level`` (a StorageLevel or its name, e.g.
-    'MEMORY_AND_DISK') persists the shingle and candidate relations so
-    the corpus is scanned ONCE — the pipeline setting at 100 TB; the
-    default None keeps the query a pure transformation (the driver
-    contract's comparison mode). Measured delta is recorded in
-    BENCH_SCALING.md."""
-    sh = _maybe_persist(_shingles(spark, sf_dir), storage_level)
-    cands = _maybe_persist(
-        q_minhash_lsh(spark, sf_dir, sh=sh).select("a_id", "b_id"), storage_level
-    )
+    that q_ngram_jaccard uses as its tiny-scale oracle form."""
+    sh = _shingles(spark, sf_dir)
+    cands = q_minhash_lsh(spark, sf_dir, sh=sh).select("a_id", "b_id")
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
     a_sh = sh.select(F.col("doc_id").alias("a_id"), "shingle")
     b_sh = sh.select(F.col("doc_id").alias("b_id"), "shingle")
@@ -1256,12 +1183,7 @@ SELECT doc_id, n_tokens,
 FROM qbase
 """
 
-def q_dedup_best_of_cluster(
-    spark: SparkSession,
-    sf_dir: str,
-    storage_level=None,
-    use_reliable_checkpoint: bool = False,
-) -> DataFrame:
+def q_dedup_best_of_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quality-ranked dedup: one survivor per duplicate group, chosen as
     the HIGHEST-quality member (ties to the smallest doc_id) instead of
     q_dedup_corpus's min-doc_id canonical — the production refinement
@@ -1291,13 +1213,10 @@ def q_dedup_best_of_cluster(
     its best non-NULL member, and an all-NULL group still elects its
     min-doc_id member with quality NULL. The oracle join is NULL-safe
     (IS NOT DISTINCT FROM) so both engines keep such groups."""
-    nd = _maybe_persist(_norm_docs(spark, sf_dir), storage_level)
+    nd = _norm_docs(spark, sf_dir)
     exact_keep = _exact_canonicals(nd)
     comps = q_near_dup_components(
-        spark,
-        sf_dir,
-        sh=_shingles(spark, sf_dir, nd=nd),
-        use_reliable_checkpoint=use_reliable_checkpoint,
+        spark, sf_dir, sh=_shingles(spark, sf_dir, nd=nd)
     )
     qual = q_quality_score(spark, sf_dir).select("doc_id", "quality")
     members = (
@@ -2086,14 +2005,12 @@ def _assign_to(
     # _spread BEFORE the broadcast crossJoin: the O(n*k) interpreted
     # folds then run on shuffle-partition-count tasks instead of the
     # scan's task count (1 at bench scale — measured 0.88 s -> 0.23 s
-    # per assignment, r8). Round-robin (no key) on purpose: the
-    # downstream per-vector agg/window then needs its own exchange, so
-    # the fold sits BELOW a shuffle boundary and multi-reference plans
-    # (semantic_prep/flags reference the assignment 3-5x) dedup it via
-    # ReusedExchange instead of re-running the quadratic per reference.
-    # A vec_id's k distance rows never split across tasks (they come
-    # from one input row), so the partial min still completes map-side
-    # and the exchange carries one row per vector.
+    # per assignment, r8). Hash-partitioned by vec_id: the broadcast
+    # join keeps that partitioning, so the per-vector min (partial and
+    # final) completes in the fold's own stage with no further exchange.
+    # No shuffle boundary sits above the fold, so exchange reuse cannot
+    # dedup it — plans that reference the assignment more than once
+    # (semantic_prep/flags: 3-5x) put it behind _barrier instead.
     d2 = _spread(e, "vec_id").crossJoin(F.broadcast(cent)).select(
         "vec_id", "cent_id", d2_expr.alias("d2")
     )
@@ -2205,8 +2122,8 @@ def _trained_centroids(
     """(vectors, centroids-after-iters). The trainer loop is driver-side
     — iterative algorithms are the one legitimate driver loop (same
     pattern as near_dup_components): each iteration is a full
-    distributed Lloyd step, and the tiny centroid table is
-    localCheckpoint-ed per iteration so the lineage (and the broadcast
+    distributed Lloyd step, and the tiny centroid table passes through
+    _barrier per iteration so the lineage (and the broadcast
     plan feeding the next step) stays flat instead of growing a
     crossJoin chain the optimizer must re-expand every round.
     ``e`` overrides the (vec_id, v) training relation — the incremental
@@ -2225,16 +2142,13 @@ def _trained_centroids(
         assign = _assign_to(e, cent, 1, backend=backend).select(
             "vec_id", "cent_id"
         )
-        # per-iteration localCheckpoint: keeps the lineage flat AND pays
-        # for each Lloyd step exactly once. (r8 re-measured the
+        # per-iteration barrier: keeps the lineage flat AND pays for
+        # each Lloyd step exactly once. (r8 re-measured the
         # NO-checkpoint alternative — one action runs the unrolled
         # chain: every downstream reference re-executes the trainer
         # subtree (broadcast-exchange reuse does NOT rescue it) and the
         # family got 20-85% slower; see OPTIMIZATION_r08.md.)
-        # (eager=False was also measured r8: interleaved A/B min 3.192
-        # vs 3.218 s — indistinguishable; the eager per-iteration job
-        # is kept for its simpler execution story.)
-        cent = _centroid_means(assign, e).localCheckpoint()
+        cent = _barrier(_centroid_means(assign, e))
     return e, cent
 
 
@@ -2281,7 +2195,7 @@ def train_kmeans_converged(
     history: list[float] = []
     for it in range(1, max_iters + 1):
         assign = _assign_to(e, cent, 1).select("vec_id", "cent_id")
-        new_cent = _centroid_means(assign, e).localCheckpoint()
+        new_cent = _barrier(_centroid_means(assign, e))
         move_expr = F.aggregate(
             F.zip_with("cv", "ncv", lambda a, b: (a - b) * (a - b)),
             F.lit(0.0),
@@ -3414,7 +3328,7 @@ def semantic_incremental_verdicts(
     (_store_compare_arrow: one new x kept GEMM per cluster), and the
     batch-internal member fold — in numpy; verdicts pinned identical to
     the fold by tests/test_semantic_arrow.py."""
-    # Barrier (lazy localCheckpoint, the corpus_prep_final pattern):
+    # Barrier (the corpus_prep_final pattern):
     # n_assign is referenced three times below (the compare input, the
     # survivor anti-join, the final left join) and cmp twice — Spark has
     # no common-subtree materialization, so without a barrier one action
@@ -3544,7 +3458,7 @@ def q_semantic_dedup_incremental(
         .where(F.col("keep"))
         .select("vec_id")
     )
-    # Barrier the derived store (lazy localCheckpoint): stored_kept
+    # Barrier the derived store: stored_kept
     # feeds both the size guard and the kept-list collect inside
     # semantic_incremental_verdicts, and the s_assign/flags subtree
     # above it would otherwise execute once per reference (measured

@@ -133,25 +133,18 @@ def _ocr_keyed(spark: SparkSession, sf_dir: str, frames: DataFrame) -> DataFrame
 
 
 def dataset_samples(
-    spark: SparkSession,
-    sf_dir: str,
-    with_augment: bool = True,
-    storage_level=None,
+    spark: SparkSession, sf_dir: str, with_augment: bool = True
 ) -> DataFrame:
     """One row per validated dataset sample, with the reference
     ``__getitem__`` field set. ``with_augment=False`` stops after the
     deterministic profile assignment (U6) — no Python stage at all.
 
-    ``storage_level`` persists the sequenced frame relation, which all
-    three big sides (the positional-join spine, the synthetic LLM lists,
-    and the tesseract keying) re-derive from the corpus when left as a
-    pure transformation — in production these sides come from SEPARATE
-    stored tables, so the multi-scan is an artifact of the synthetic
-    single-source derivation, but the knob makes the single-scan shape
-    real here too (tests/test_plan_quality.py counts the file scans)."""
-    from .queries_corpus import _maybe_persist
-
-    frames = _maybe_persist(_media_seq(spark, sf_dir), storage_level)
+    All three big sides (the positional-join spine, the synthetic LLM
+    lists, and the tesseract keying) re-derive the sequenced frame
+    relation from the corpus — in production these sides come from
+    SEPARATE stored tables, so the multi-scan is an artifact of the
+    synthetic single-source derivation."""
+    frames = _media_seq(spark, sf_dir)
     llm = _llm_side(frames)
 
     # J2 positional join: frame i ⋈ compacted LLM entry i, min-truncated

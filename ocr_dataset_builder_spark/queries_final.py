@@ -68,9 +68,9 @@ from .queries_corpus import (
     _QUAL_EXPR_SQL,
     _SEM_PROTO_CTES,
     _SHINGLE_CTE,
+    _barrier,
     _docs,
     _hex15,
-    _maybe_persist,
     _shingles,
     q_quality_score,
     q_semantic_prep,
@@ -97,27 +97,25 @@ from .queries_substr import (
 def _final_survivors(
     spark: SparkSession,
     sf_dir: str,
-    storage_level=None,
     centroids: DataFrame | None = None,
-    materialize: bool = True,
     backend: str = "fold",
 ) -> DataFrame:
     """Stages 1-4: (doc_id, source, n_kept, kept_text) — decontaminated,
     exact-canonical, substring-cleaned (text applied, emptied docs
     dropped), semantic-kept survivors.
 
-    ``materialize`` (default True) localCheckpoints the canonical set
-    and the survivor set — the two relations the downstream chain
-    references 3+ and 7+ times. Without a barrier the COMPOSED plan
-    replays the entire stage-1..4 chain once per reference (measured:
-    6,586 Exchange nodes / 3,051 scans / 47 s of planning at sf0.001 —
-    runtime exchange reuse does not rescue a plan this degenerate).
+    The canonical set and the survivor set pass through _barrier — the
+    two relations the downstream chain references 3+ and 7+ times.
+    Without a barrier the COMPOSED plan replays the entire stage-1..4
+    chain once per reference (measured: 6,586 Exchange nodes / 3,051
+    scans / 47 s of planning at sf0.001 — runtime exchange reuse does
+    not rescue a plan this degenerate).
     These are exactly the stage boundaries a production pipeline
     persists to a table anyway (the survivor set IS the cleaned-corpus
     ship artifact); the checkpoint is the in-session stand-in. Same
-    precedent as the k-means trainer's per-iteration localCheckpoint."""
+    precedent as the k-means trainer's per-iteration barrier."""
     d = _docs(spark, sf_dir).where(F.col("doc_id") % _PROBE_MOD != 0)
-    sh = _maybe_persist(_shingles(spark, sf_dir), storage_level)
+    sh = _shingles(spark, sf_dir)
     hits = _q_decontaminate_from(spark, sf_dir, sh).where(F.col("contaminated"))
     clean = d.join(hits.select("doc_id"), "doc_id", "left_anti")
     fp = clean.select(
@@ -129,21 +127,13 @@ def _final_survivors(
     # doc_id leads the struct (unique), so the lexicographic min never
     # compares the payload fields — same skew-safe election as
     # corpus_prep_substr
-    canon = _maybe_persist(
+    canon = _barrier(
         fp.groupBy("fp")
         .agg(F.min(F.struct("doc_id", "source", "norm")).alias("c"))
-        .select("c.doc_id", "c.source", "c.norm"),
-        storage_level,
+        .select("c.doc_id", "c.source", "c.norm")
     )
-    if materialize:
-        canon = canon.localCheckpoint()
     rspans = _spans_from_starts(
-        _removal_starts(
-            spark,
-            sf_dir,
-            nd=canon.select("doc_id", "norm"),
-            storage_level=storage_level,
-        )
+        _removal_starts(spark, sf_dir, nd=canon.select("doc_id", "norm"))
     )
     applied = _apply_removals(canon.select("doc_id", "norm"), rspans)
     survivors = (
@@ -160,39 +150,31 @@ def _final_survivors(
     ).select(
         F.col("vec_id").alias("doc_id"), F.col("keep").alias("_sem_keep")
     )
-    surv = _maybe_persist(
+    return _barrier(
         survivors.join(sem, "doc_id", "left")
         .where(F.coalesce("_sem_keep", F.lit(True)))
-        .drop("_sem_keep"),
-        storage_level,
+        .drop("_sem_keep")
     )
-    return surv.localCheckpoint() if materialize else surv
 
 
 def q_corpus_prep_final(
     spark: SparkSession,
     sf_dir: str,
-    storage_level=None,
     centroids: DataFrame | None = None,
-    materialize: bool = True,
     backend: str = "fold",
 ) -> DataFrame:
     """The composed training-ready corpus (see module docstring).
 
-    The registered default MATERIALIZES the three stage boundaries the
-    downstream chain fans out over (canonical set, survivor set, budget
-    keep set) via localCheckpoint — see _final_survivors for the
-    measured plan-explosion numbers that make the fully-pure form
-    untenable (unlike corpus_prep_budget, whose single fan-out exchange
-    reuse absorbs). ``materialize=False`` keeps the pure one-plan form
-    for plan inspection. ``storage_level`` additionally persists the
-    shingle relation; ``centroids=`` shares an already-trained k-means
-    relation with the rest of the semantic family (one trainer job per
-    pipeline run); ``backend="arrow"`` routes stage 4's cosine kernels
-    (trainer, assignment, member fold) through the GEMM path."""
-    surv = _final_survivors(
-        spark, sf_dir, storage_level, centroids, materialize, backend
-    )
+    MATERIALIZES (_barrier) the three stage boundaries the downstream
+    chain fans out over (canonical set, survivor set, budget keep set)
+    — see _final_survivors for the measured plan-explosion numbers that
+    make the fully-pure form untenable (unlike corpus_prep_budget,
+    whose single fan-out exchange reuse absorbs). ``centroids=`` shares
+    an already-trained k-means relation with the rest of the semantic
+    family (one trainer job per pipeline run); ``backend="arrow"``
+    routes stage 4's cosine kernels (trainer, assignment, member fold)
+    through the GEMM path."""
+    surv = _final_survivors(spark, sf_dir, centroids, backend)
     # ---- stage 5: budget fill over POST-REMOVAL tokens ----------------
     qsc = q_quality_score(spark, sf_dir).select("doc_id", "quality")
     cand = (
@@ -205,12 +187,7 @@ def q_corpus_prep_final(
             "quality",
         )
     )
-    kept = _maybe_persist(
-        budget_fill(cand).withColumnRenamed("n_tokens", "n_tok"),
-        storage_level,
-    )
-    if materialize:
-        kept = kept.localCheckpoint()
+    kept = _barrier(budget_fill(cand).withColumnRenamed("n_tokens", "n_tok"))
     # ---- stage 6: mixture-epochs plan over the KEPT corpus ------------
     # integer `div` end to end (tt*weight_bp passes 2^53 at the
     # 10^12-token scale this targets) — same derivation as

@@ -784,9 +784,7 @@ FROM flags
 # ---------------------------------------------------------------------------
 
 
-def q_corpus_prep(
-    spark: SparkSession, sf_dir: str, storage_level=None
-) -> DataFrame:
+def q_corpus_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The composed corpus-side product query: what a pretraining run
     actually consumes. Decontaminate (drop probe docs and anything
     sharing a probe 3-gram) -> stratified sample (per-source rates) ->
@@ -797,14 +795,11 @@ def q_corpus_prep(
     Composition of already-proven pieces, but registered as ONE query so
     cross-stage drift (e.g. dedup electing a canonical that sampling
     removed) cannot hide between piecewise proofs — the corpus-side
-    twin of ``dataset_sample``. ``storage_level`` persists the shingle
-    relation that both decontamination sides (probe set + corpus hits)
-    re-derive when left as a pure transformation — same single-scan
-    knob as dataset_samples (driver compares the pure form)."""
-    from .queries_corpus import _NORM_SPARK, _maybe_persist
+    twin of ``dataset_sample``."""
+    from .queries_corpus import _NORM_SPARK
 
     d = _docs(spark, sf_dir).where(F.col("doc_id") % _PROBE_MOD != 0)
-    sh = _maybe_persist(_shingles(spark, sf_dir), storage_level)
+    sh = _shingles(spark, sf_dir)
     hits = _q_decontaminate_from(spark, sf_dir, sh).where(F.col("contaminated"))
     clean = d.join(hits.select("doc_id"), "doc_id", "left_anti")
     sampled = clean.where(
@@ -1181,18 +1176,14 @@ SELECT rnk, doc_id, n_frames, corpus_frac FROM (
 _TBS_FRAC = 0.5  # per-source budget = floor(frac * source's total tokens)
 
 
-def q_token_budget_sample(
-    spark: SparkSession, sf_dir: str, storage_level=None
-) -> DataFrame:
+def q_token_budget_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Greedy per-source token-budget fill: order each source's docs by
     (quality DESC, doc_id ASC) and keep docs while the tokens already
     taken stay under the source budget (floor(_TBS_FRAC * source
     tokens)). Output: the kept (doc_id, source, n_tokens, quality).
     Unscoreable docs (zero characters -> NULL quality) are not fill
     candidates and do not contribute to the source totals — pinned in
-    the oracle by the same IS NOT NULL filter. The scored relation
-    feeds four branches; ``storage_level`` persists it for pipeline
-    callers (the registered form stays a pure transformation).
+    the oracle by the same IS NOT NULL filter.
 
     Scale: no per-source ranking of documents ever happens. Stage 1
     reduces docs to exact-quality groups — a partial agg, and the
@@ -1205,7 +1196,7 @@ def q_token_budget_sample(
     pack_offsets — bucket totals, a window over the tiny bucket
     relation, then per-bucket local windows. Every window in the plan
     is over a relation with a proven size bound."""
-    from .queries_corpus import _barrier, _maybe_persist, q_quality_score
+    from .queries_corpus import _barrier, q_quality_score
 
     qsc = q_quality_score(spark, sf_dir).select(
         "doc_id", F.col("n_tokens").cast("bigint").alias("n_tokens"), "quality"
@@ -1216,12 +1207,7 @@ def q_token_budget_sample(
     # signals (and, with the r8 _spread under quality_score, each
     # branch carried its own repartition exchange — measured +89% on
     # this key before the barrier)
-    d = _barrier(
-        _maybe_persist(
-            qsc.where(F.col("quality").isNotNull()).join(src, "doc_id"),
-            storage_level,
-        )
-    )
+    d = _barrier(qsc.where(F.col("quality").isNotNull()).join(src, "doc_id"))
     return budget_fill(d)
 
 
@@ -1795,9 +1781,7 @@ GROUP BY source
 # ---------------------------------------------------------------------------
 
 
-def q_corpus_prep_budget(
-    spark: SparkSession, sf_dir: str, storage_level=None
-) -> DataFrame:
+def q_corpus_prep_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The budget-fill twin of ``corpus_prep``: decontaminate (drop
     probe docs and anything sharing a probe 3-gram) -> exact dedup
     (min-doc_id canonical per normalized-text fingerprint, elected over
@@ -1822,8 +1806,7 @@ def q_corpus_prep_budget(
     and packing is the two-phase prefix sum. Registered as ONE query so
     cross-stage drift (a budget counting tokens dedup removed, a fill
     candidate decontamination dropped) cannot hide between piecewise
-    proofs. ``storage_level`` persists the shingle relation both
-    decontamination sides re-derive (same knob as ``corpus_prep``).
+    proofs.
 
     Fan-out note (measured, sf0.1 local[32]): :func:`budget_fill`
     references the canonical-survivor relation in four branches, and
@@ -1836,10 +1819,10 @@ def q_corpus_prep_budget(
     caching forces a materialization barrier and serializes the wide
     relation, measuring ~30% SLOWER cold than letting exchange reuse
     dedupe (best-of-4: 5.4 s pure vs 7.1 s persisted)."""
-    from .queries_corpus import _NORM_SPARK, _maybe_persist, q_quality_score
+    from .queries_corpus import _NORM_SPARK, q_quality_score
 
     d = _docs(spark, sf_dir).where(F.col("doc_id") % _PROBE_MOD != 0)
-    sh = _maybe_persist(_shingles(spark, sf_dir), storage_level)
+    sh = _shingles(spark, sf_dir)
     hits = _q_decontaminate_from(spark, sf_dir, sh).where(F.col("contaminated"))
     clean = d.join(hits.select("doc_id"), "doc_id", "left_anti")
     qsc = q_quality_score(spark, sf_dir).select(
@@ -1858,7 +1841,7 @@ def q_corpus_prep_budget(
     from .queries_corpus import _barrier
 
     # _barrier (r8): budget_fill references the canonical relation in
-    # four branches; this one is NARROW (4 scalar columns) so the lazy
+    # four branches; this one is NARROW (4 scalar columns) so the
     # materialization is cheap — unlike the r6-rejected persist of the
     # WIDE survivor relation (docstring above), which serialized text
     canon = _barrier(

@@ -45,7 +45,6 @@ from .queries_corpus import (
     _barrier,
     _docs,
     _hex15,
-    _maybe_persist,
     _norm_docs,
     positional_ngrams,
 )
@@ -92,20 +91,12 @@ def _dup_windows(
     w: int = _SUBSTR_W,
     nd: DataFrame | None = None,
     fingerprint: str = "md5",
-    storage_level=None,
 ) -> DataFrame:
     """Windows that occur >= 2 times corpus-wide. The dup-fingerprint
     side is a partial-agg count (small shuffle) and the semi-join
     carries no hint, so the planner broadcasts the dup set when tiny
-    and shuffles when not — the right call at both ends of the scale.
-    Left pure, both join sides recompute the window/fingerprint stage
-    (two scans); ``storage_level`` persists it once — the same
-    single-scan knob as dataset_sample/corpus_prep (the driver always
-    compares the pure form)."""
-    wins = _maybe_persist(
-        _windows(spark, sf_dir, w, nd=nd, fingerprint=fingerprint),
-        storage_level,
-    )
+    and shuffles when not — the right call at both ends of the scale."""
+    wins = _windows(spark, sf_dir, w, nd=nd, fingerprint=fingerprint)
     dup_fps = (
         wins.groupBy("fp")
         .agg(F.count("*").alias("occ"))
@@ -140,21 +131,13 @@ def q_substr_dup_spans(
     spark: SparkSession,
     sf_dir: str,
     fingerprint: str = "md5",
-    storage_level=None,
     w: int = _SUBSTR_W,
 ) -> DataFrame:
     """Maximal repeated-substring spans over ALL duplicated occurrences
     (the redundancy report: every repeat is flagged, including the copy
     a keep-first dedup would retain)."""
     return _spans_from_starts(
-        _dup_windows(
-            spark,
-            sf_dir,
-            w=w,
-            fingerprint=fingerprint,
-            storage_level=storage_level,
-        ),
-        w=w,
+        _dup_windows(spark, sf_dir, w=w, fingerprint=fingerprint), w=w
     )
 
 
@@ -301,20 +284,14 @@ def _coverage_stats(
     )
 
 
-def q_dedup_substrings(
-    spark: SparkSession, sf_dir: str, storage_level=None
-) -> DataFrame:
+def q_dedup_substrings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Removal stats for substring dedup: per document, total tokens,
     tokens covered by the UNION of repeat spans (overlap-safe interval
     merge), span count, and the removable fraction. Every document
     appears (zero-covered docs included) so the output is the corpus
-    report a dedup run signs off on. ``storage_level`` persists the
-    window/fingerprint stage (referenced by both dup-join sides)."""
+    report a dedup run signs off on."""
     return _coverage_stats(
-        spark,
-        sf_dir,
-        q_substr_dup_spans(spark, sf_dir, storage_level=storage_level),
-        "frac_dup_ppm",
+        spark, sf_dir, q_substr_dup_spans(spark, sf_dir), "frac_dup_ppm"
     )
 
 
@@ -415,15 +392,13 @@ def _removal_starts(
     spark: SparkSession,
     sf_dir: str,
     nd: DataFrame | None = None,
-    storage_level=None,
     w: int = _SUBSTR_W,
 ) -> DataFrame:
     """Keep-first removal candidates over the corpus windows. One
     partial-agg shuffle on the fingerprint (count + min-struct in the
     same pass — the dup filter and the canonical pick share it) and one
     keyed join back; see _keep_first_removals for the skew story."""
-    wins = _maybe_persist(_windows(spark, sf_dir, w, nd=nd), storage_level)
-    return _keep_first_removals(wins)
+    return _keep_first_removals(_windows(spark, sf_dir, w, nd=nd))
 
 
 def q_substr_removal_spans(
@@ -527,7 +502,7 @@ def _apply_removals(nd: DataFrame, rspans: DataFrame) -> DataFrame:
 
 
 def q_dedup_substr_apply(
-    spark: SparkSession, sf_dir: str, storage_level=None, w: int = _SUBSTR_W
+    spark: SparkSession, sf_dir: str, w: int = _SUBSTR_W
 ) -> DataFrame:
     """The dedup SHIP step (what a Lee-style run actually emits, vs the
     reports the other rungs produce): each document's post-removal text
@@ -537,10 +512,7 @@ def q_dedup_substr_apply(
     kept_text = '' and n_kept = 0 (a downstream corpus build drops
     those rows). Reference end-product analogue: the cleaned per-frame
     text shipped by data/pytorch_dataset.py:526-536."""
-    rspans = _spans_from_starts(
-        _removal_starts(spark, sf_dir, storage_level=storage_level, w=w),
-        w=w,
-    )
+    rspans = _spans_from_starts(_removal_starts(spark, sf_dir, w=w), w=w)
     return _apply_removals(
         _norm_docs(spark, sf_dir).select("doc_id", "norm"), rspans
     )
@@ -591,7 +563,7 @@ FROM toks2 t LEFT JOIN kept_agg ka ON ka.doc_id = t.doc_id
 
 
 def q_corpus_prep_substr(
-    spark: SparkSession, sf_dir: str, storage_level=None, emit_text: bool = False
+    spark: SparkSession, sf_dir: str, emit_text: bool = False
 ) -> DataFrame:
     """corpus_prep upgraded to the modern dedup standard: the doc-level
     chain (decontaminate -> stratified sample -> exact dedup) from
@@ -616,10 +588,7 @@ def q_corpus_prep_substr(
     from .queries_corpus import _shingles
 
     d = _docs(spark, sf_dir).where(F.col("doc_id") % _PROBE_MOD != 0)
-    # the knob persists the two relations every downstream side
-    # re-derives when pure: the shingle set (probe + corpus hits) and
-    # the survivor set (windows, removal base, coverage base)
-    sh = _maybe_persist(_shingles(spark, sf_dir), storage_level)
+    sh = _shingles(spark, sf_dir)
     hits = _q_decontaminate_from(spark, sf_dir, sh).where(F.col("contaminated"))
     clean = d.join(hits.select("doc_id"), "doc_id", "left_anti")
     sampled = clean.where(
@@ -638,18 +607,12 @@ def q_corpus_prep_substr(
     # map-side — strictly less shuffle than either the window form or an
     # agg+join-back (never a window over the full-text fp: hot on
     # boilerplate)
-    canon = _maybe_persist(
+    canon = (
         fp.groupBy("fp")
         .agg(F.min(F.struct("doc_id", "source", "norm")).alias("c"))
-        .select("c.doc_id", "c.source", "c.norm"),
-        storage_level,
+        .select("c.doc_id", "c.source", "c.norm")
     )
-    removal = _removal_starts(
-        spark,
-        sf_dir,
-        nd=canon.select("doc_id", "norm"),
-        storage_level=storage_level,
-    )
+    removal = _removal_starts(spark, sf_dir, nd=canon.select("doc_id", "norm"))
     rspans = _spans_from_starts(removal)
     survivors = _survivor_coverage(canon, rspans)
     passengers = ["removed_tokens", "source"]
@@ -1241,7 +1204,6 @@ def q_substr_dup_rate(
     spark: SparkSession,
     sf_dir: str,
     per_doc: DataFrame | None = None,
-    storage_level=None,
 ) -> DataFrame:
     """Corpus observability rollup: per source, total tokens, tokens
     inside dup spans, doc counts, and the duplication rate in ppm — the
@@ -1252,14 +1214,10 @@ def q_substr_dup_rate(
     A pipeline that already holds the per-doc report (q_dedup_substrings
     output — the artifact a dedup run signs off on) passes it as
     ``per_doc`` and pays ONLY the rollup (~0.14 s at sf0.1 vs the ~2.5 s
-    chain — the form bench.py measures); standalone invocations can opt
-    into ``storage_level`` to compute the window stage once instead of
-    twice. The registered default stays pure: _maybe_persist's contract
-    is that persistence is opt-in (a default persist leaks a cache entry
-    per invocation for the session lifetime). Semantics are identical on
-    every path — pinned by the composed-equals-standalone test."""
+    chain — the form bench.py measures). Semantics are identical on
+    both paths — pinned by the composed-equals-standalone test."""
     if per_doc is None:
-        per_doc = q_dedup_substrings(spark, sf_dir, storage_level=storage_level)
+        per_doc = q_dedup_substrings(spark, sf_dir)
     src = _docs(spark, sf_dir).select("doc_id", "source")
     return (
         per_doc.join(src, "doc_id")

@@ -1,6 +1,6 @@
 """bench.py is a driver-facing contract: it must print exactly one JSON
-line with the agreed keys. Run at the tiny sf with replication 1 so the
-guard stays cheap."""
+line with the agreed keys. Run at the tiny sf with replication 1 and one
+timed sample per key so the guard stays cheap."""
 
 from __future__ import annotations
 
@@ -21,6 +21,9 @@ def test_bench_emits_one_json_line_with_contract_keys():
         SPARK_GRAFT_SF_DIR="/root/testdata/sf0.001",
         SPARK_GRAFT_CPUS="4",
         SPARK_GRAFT_BENCH_REP="1",
+        # one timed sample per key: the contract is the output shape,
+        # not the timings
+        SPARK_GRAFT_BENCH_RUNS="1",
         # keep the repo-root fallback artifact out of test runs
         SPARK_GRAFT_BENCH_OUT=out_file,
     )

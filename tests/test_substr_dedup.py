@@ -239,20 +239,6 @@ def test_window_width_parameter(spark, substr_dir):
     assert spans[(2, 1, 10)] == (1, 10)
 
 
-def test_corpus_prep_substr_persist_knob_equal(spark, sf_dir):
-    pure = sorted(map(tuple, qs.q_corpus_prep_substr(spark, sf_dir).collect()))
-    knob = sorted(
-        map(
-            tuple,
-            qs.q_corpus_prep_substr(
-                spark, sf_dir, storage_level="MEMORY_AND_DISK"
-            ).collect(),
-        )
-    )
-    assert pure == knob
-    spark.catalog.clearCache()
-
-
 def _brute_force_spans(docs: dict, w: int):
     """Independent O(n^2)-naive Python oracle: all dup spans and
     keep-first removal spans over {doc_id: [tokens]}."""
@@ -421,23 +407,13 @@ def test_corpus_prep_substr_emit_text(spark, sf_dir):
 
 def test_substr_dup_rate_composed_equals_standalone(spark, sf_dir):
     """The rollup over an externally supplied per-doc report equals the
-    pure standalone form, and the opt-in persist knob changes nothing."""
+    pure standalone form."""
     per_doc = qs.q_dedup_substrings(spark, sf_dir)
     composed = sorted(
         map(tuple, qs.q_substr_dup_rate(spark, sf_dir, per_doc=per_doc).collect())
     )
     standalone = sorted(map(tuple, qs.q_substr_dup_rate(spark, sf_dir).collect()))
     assert composed == standalone
-    knob = sorted(
-        map(
-            tuple,
-            qs.q_substr_dup_rate(
-                spark, sf_dir, storage_level="MEMORY_AND_DISK"
-            ).collect(),
-        )
-    )
-    assert knob == standalone
-    spark.catalog.clearCache()
 
 
 def test_file_index_matches_in_plan_incremental(spark, sf_dir):
