@@ -90,7 +90,6 @@ def grouped_map_in_arrow(
     order_cols: list[str],
     block_fn,
     out_schema: str,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Arrow-native sibling of ``grouped_map_in_pandas`` for numeric-key
     kernels (GEMM over per-cluster / per-bucket vector blocks).
@@ -111,16 +110,17 @@ def grouped_map_in_arrow(
     child distribution, which the planner must satisfy and AQE cannot
     break, so key co-location is guaranteed by contract.
 
-    The explicit ``num_partitions`` repartition ahead of the groupBy
-    keeps the heavy per-group compute fanned out (AQE would coalesce a
-    small-bytes relation to ~1 partition and run single-threaded, the
-    _fan_out lesson); when it is redundant the planner drops it and the
-    applyInArrow distribution requirement still holds.
+    The explicit repartition to 2 x defaultParallelism partitions ahead
+    of the groupBy keeps the heavy per-group compute fanned out (AQE
+    would coalesce a small-bytes relation to ~1 partition and run
+    single-threaded, the _fan_out lesson); when it is redundant the
+    planner drops it and the applyInArrow distribution requirement
+    still holds.
 
-    ``block_fn`` receives a ``pyarrow.Table`` holding one or more
-    COMPLETE groups, sorted by (key_col, *order_cols), and yields
-    ``pyarrow.RecordBatch`` objects matching ``out_schema`` (here it is
-    called once per group)."""
+    ``block_fn`` is called once per group: it receives a
+    ``pyarrow.Table`` holding exactly one COMPLETE group, sorted by
+    order_cols, and yields ``pyarrow.RecordBatch`` objects matching
+    ``out_schema`` (yielding none emits no rows)."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
     from pyspark.sql.types import _parse_datatype_string
@@ -137,73 +137,8 @@ def grouped_map_in_arrow(
             return pa_schema.empty_table()
         return pa.Table.from_batches(batches).cast(pa_schema)
 
-    if num_partitions is None:
-        num_partitions = df.sparkSession.sparkContext.defaultParallelism * 2
-    sel = df.repartition(num_partitions, key_col)
+    sel = df.repartition(
+        df.sparkSession.sparkContext.defaultParallelism * 2, key_col
+    )
     return sel.groupBy(key_col).applyInArrow(_one_group, schema=out_schema)
 
-
-def grouped_blocks_in_arrow(
-    df: DataFrame,
-    key_col: str,
-    order_cols: list[str],
-    block_fn,
-    out_schema: str,
-) -> DataFrame:
-    """Block-cutting Arrow sibling of ``grouped_map_in_arrow`` for the
-    MANY-TINY-GROUPS regime: one Python crossing per Arrow batch instead
-    of one ``applyInArrow`` call per group.
-
-    Choosing between the two helpers (r8, measured by
-    scripts/microbench_grouped.py on 128k 64-dim vectors, local[32]):
-
-    - ``grouped_map_in_arrow`` (per-group applyInArrow): the per-group
-      call costs ~12us (measured: +0.83 s end-to-end at 65,536 two-row
-      buckets vs this helper — 2.31 s vs 1.48 s; at 64 fat buckets it
-      WINS, 2.18 s vs 2.44 s, because the GEMM dominates and the
-      block-cut carry logic is pure overhead) and the REQUIRED
-      ClusteredDistribution makes co-location contractual. Use it by
-      default — every current caller has capped, thousands-scale groups.
-    - ``grouped_blocks_in_arrow``: when the group count reaches ~10^4+
-      with <~100 rows per group, the per-group crossing dominates
-      (linear in group count: a 10^6-tiny-group shape would pay ~12 s
-      of pure call overhead); this form amortizes it to one crossing
-      per Arrow batch. Full sweep in OPTIMIZATION_r08.md.
-
-    Co-location: same pmod(hash(key)) user-repartition hardening as
-    ``grouped_map_in_pandas`` (Catalyst cannot elide it, AQE neither
-    coalesces nor local-reads a user repartition), plus
-    sortWithinPartitions so ``block_fn`` sees contiguous key runs.
-    ``block_fn`` has the SAME contract as grouped_map_in_arrow's: it
-    receives a pyarrow.Table of one or more COMPLETE groups sorted by
-    (key_col, *order_cols) and yields RecordBatches matching
-    ``out_schema``; a group split across incoming Arrow batches is
-    carried and re-joined before block_fn sees it."""
-    import numpy as np
-    import pyarrow as pa
-
-    sel = df.repartition(
-        F.pmod(F.hash(key_col), F.lit(1 << 30))
-    ).sortWithinPartitions(key_col, *order_cols)
-
-    def _run(batches):
-        carry: "pa.Table | None" = None
-        for b in batches:
-            tbl = pa.Table.from_batches([b])
-            if carry is not None:
-                tbl = pa.concat_tables([carry, tbl]).combine_chunks()
-                carry = None
-            n = tbl.num_rows
-            if n == 0:
-                continue
-            k = tbl.column(key_col).to_numpy(zero_copy_only=False)
-            diff = k[::-1] != k[-1]
-            trail = int(np.argmax(diff)) if diff.any() else n
-            cut = n - trail
-            carry = tbl.slice(cut)
-            if cut > 0:
-                yield from block_fn(tbl.slice(0, cut))
-        if carry is not None and carry.num_rows > 0:
-            yield from block_fn(carry)
-
-    return sel.mapInArrow(_run, schema=out_schema)

@@ -2025,11 +2025,15 @@ def _np_matrix(varr, where: str):
     ragged batch whose total element count divides evenly by the row
     count reshapes into wrong rows without an error. Derive the dim
     from the list offsets and fail loudly on any violation of the
-    uniform-dim/no-null contract the fold path enforces per-row."""
+    uniform-dim/no-null contract the fold path enforces per-row. A
+    ``ChunkedArray`` (a grouped kernel's table column) is combined
+    first, so the guards see every chunk."""
     import numpy as np
-
+    import pyarrow as pa
     import pyarrow.compute as pc
 
+    if isinstance(varr, pa.ChunkedArray):
+        varr = varr.combine_chunks()
     if varr.null_count:
         raise ValueError(f"{where}: null embedding entries in batch")
     # list_value_length (not raw .offsets) — correct under array slices
@@ -2546,9 +2550,10 @@ def q_embedding_near_dup_lsh(
 def _near_dup_pairs_arrow(ev: DataFrame) -> DataFrame:
     """Bucketed pair verification via one upper-triangle GEMM per bucket.
 
-    ``ev``: (vec_id, v, bucket). In-cap buckets (2.._EMB_BUCKET_CAP, the
-    fold path's guard exactly) stream as contiguous vec_id-sorted runs
-    through grouped mapInArrow; each bucket's vectors exist ONCE per task
+    ``ev``: (vec_id, v, bucket). Each in-cap bucket (2.._EMB_BUCKET_CAP,
+    the fold path's guard exactly) reaches the kernel whole and
+    vec_id-sorted, one grouped_map_in_arrow call per bucket; its vectors
+    exist ONCE per task
     — no per-pair (av, bv) duplication through an explode (the fold form
     carries both full vectors on every candidate row) — and all C(n,2)
     dots are numpy matmul. Emits (a_id, b_id, cos) with a_id < b_id and
@@ -2556,65 +2561,39 @@ def _near_dup_pairs_arrow(ev: DataFrame) -> DataFrame:
     The size guard is a pre-join on the aggregated bucket-size relation
     (not broadcast-hinted — at scale the bucket-id relation can be wide;
     the shuffle lands on the same key the grouped pass repartitions on).
-    Row-blocked at _GEMM_BLOCK, so peak memory is block x cap doubles."""
+    Row-blocked by _cos_blocks, so peak memory is block x cap doubles."""
     bsize = ev.groupBy("bucket").agg(F.count("*").alias("n"))
     ok = bsize.where(
         (F.col("n") > 1) & (F.col("n") <= _EMB_BUCKET_CAP)
     ).select("bucket")
     sel = ev.join(ok, "bucket").select("bucket", "vec_id", "v")
 
-    def _buckets(tbl):
+    def _bucket(tbl):
         import numpy as np
         import pyarrow as pa
 
-        tbl = tbl.combine_chunks()
-        bkt = tbl.column("bucket").to_numpy(zero_copy_only=False)
-        vid = tbl.column("vec_id").to_numpy(zero_copy_only=False)
-        vcol = tbl.column("v")
-        X = _np_matrix(
-            vcol.chunk(0) if isinstance(vcol, pa.ChunkedArray) else vcol,
-            "grouped-gemm-kernel",
-        )
-        starts = np.concatenate(
-            ([0], np.flatnonzero(bkt[1:] != bkt[:-1]) + 1, [len(bkt)])
-        )
+        ids = tbl.column("vec_id").to_numpy()
+        X = _np_matrix(tbl.column("v"), "_near_dup_pairs_arrow")
         o_a, o_b, o_c = [], [], []
-        for s, t in zip(starts[:-1], starts[1:]):
-            ids, Xi = vid[s:t], X[s:t]
-            n = t - s
-            nrm = np.sqrt((Xi * Xi).sum(axis=1))
-            if not nrm.all():
-                # mirror the fold kernel's contract: cosine of a
-                # zero-norm vector is an ANSI DIVIDE_BY_ZERO there, not
-                # a silent NaN-compares-False here
-                raise ValueError(
-                    "zero-norm embedding in LSH bucket: cosine undefined"
-                )
-            for b0 in range(0, n, _GEMM_BLOCK):
-                b1 = min(b0 + _GEMM_BLOCK, n)
-                c = _round4_half_up(
-                    (Xi[b0:b1] @ Xi.T)
-                    / (nrm[b0:b1, None] * nrm[None, :])
-                )
-                # upper triangle only: vec_id-sorted run => j > i is
-                # exactly the fold path's a_id < b_id pair set
-                hit = (c >= _COS_DUP_MIN) & (
-                    np.arange(n)[None, :] > np.arange(b0, b1)[:, None]
-                )
-                ii, jj = np.nonzero(hit)
-                if len(ii):
-                    o_a.append(ids[ii + b0])
-                    o_b.append(ids[jj])
-                    o_c.append(c[ii, jj])
-        if o_a:
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(np.concatenate(o_a), type=pa.int64()),
-                    pa.array(np.concatenate(o_b), type=pa.int64()),
-                    pa.array(np.concatenate(o_c), type=pa.float64()),
-                ],
-                names=["a_id", "b_id", "cos"],
+        for b0, c in _cos_blocks(X, X, "LSH bucket"):
+            # upper triangle only: vec_id-sorted bucket => j > i is
+            # exactly the fold path's a_id < b_id pair set
+            hit = (c >= _COS_DUP_MIN) & (
+                np.arange(len(ids))[None, :]
+                > np.arange(b0, b0 + len(c))[:, None]
             )
+            ii, jj = np.nonzero(hit)
+            o_a.append(ids[ii + b0])
+            o_b.append(ids[jj])
+            o_c.append(c[ii, jj])
+        yield pa.RecordBatch.from_arrays(
+            [
+                pa.array(np.concatenate(o_a), type=pa.int64()),
+                pa.array(np.concatenate(o_b), type=pa.int64()),
+                pa.array(np.concatenate(o_c), type=pa.float64()),
+            ],
+            names=["a_id", "b_id", "cos"],
+        )
 
     from .operators.grouped import grouped_map_in_arrow
 
@@ -2622,7 +2601,7 @@ def _near_dup_pairs_arrow(ev: DataFrame) -> DataFrame:
         sel,
         "bucket",
         ["vec_id"],
-        _buckets,
+        _bucket,
         "a_id bigint, b_id bigint, cos double",
     )
 
@@ -2836,7 +2815,7 @@ def _semantic_flags_tail(assign: DataFrame, flags: DataFrame) -> DataFrame:
     )
 
 
-# GEMM row-block size for the arrow kernels: bounds the live cos/dominance
+# GEMM row-block size of _cos_blocks: bounds the live cos/dominance
 # matrices at ~_GEMM_BLOCK x _SEM_CLUSTER_CAP doubles (~33 MB a matrix at
 # cap) regardless of cluster size.
 _GEMM_BLOCK = 1024
@@ -2853,81 +2832,74 @@ def _round4_half_up(c):
     return np.floor(np.abs(c) * 1e4 + 0.5) * np.sign(c) / 1e4
 
 
+def _cos_blocks(A, B, where: str):
+    """Row blocks of the cosine matrix of ``A``'s rows against ``B``'s,
+    rounded half-up to 4dp like the fold kernels: yields
+    ``(b0, round4(A[b0:b1] @ B.T / (|a| |b|)))`` for each _GEMM_BLOCK
+    rows of ``A``, so peak memory is block x len(B) doubles. Pass
+    ``B is A`` for a within-group matrix (norms computed once)."""
+    import numpy as np
+
+    an = np.sqrt((A * A).sum(axis=1))
+    bn = an if B is A else np.sqrt((B * B).sum(axis=1))
+    if not (an.all() and bn.all()):
+        # mirror the fold kernels' contract: cosine of a zero-norm
+        # vector is an ANSI DIVIDE_BY_ZERO there, not a silent
+        # NaN-compares-False here
+        raise ValueError(f"zero-norm embedding in {where}: cosine undefined")
+    for b0 in range(0, len(A), _GEMM_BLOCK):
+        b1 = min(b0 + _GEMM_BLOCK, len(A))
+        yield b0, _round4_half_up(
+            (A[b0:b1] @ B.T) / (an[b0:b1, None] * bn[None, :])
+        )
+
+
 def _member_flags_arrow(small: DataFrame) -> DataFrame:
     """Per-vector SemDeDup verdict via one GEMM per cluster.
 
     ``small``: (cent_id, vec_id, d2, v) restricted to in-cap clusters.
-    Clusters arrive as contiguous runs of a grouped mapInArrow stream
-    (grouped_map_in_arrow: repartition on cent_id with an explicit
-    partition count, sort within partitions, cut at key boundaries) —
-    each cluster's member list exists ONCE per task instead of riding a
+    Each cluster reaches the kernel whole, one grouped_map_in_arrow call
+    per cluster — its member list exists ONCE per task instead of riding a
     collect_list join onto every member row (the fold form's O(n_c^2*dim)
     byte amplification, VERDICT r6 #3), and the n_c^2 cosine work is
     numpy matmul instead of ~2e4 interpreted folds/s/core. Verdict
     semantics are the fold's exactly: cos rounded half-up to 4dp, dup bar
     _SEM_DUP_MIN, dominance = exists dup neighbor with (d2 DESC, vec_id
-    DESC) strictly ahead. Row-blocked at _GEMM_BLOCK so peak memory is
+    DESC) strictly ahead. Row-blocked by _cos_blocks so peak memory is
     block x cap, not cap x cap."""
 
-    def _clusters(tbl):
+    def _cluster(tbl):
         import numpy as np
         import pyarrow as pa
 
-        tbl = tbl.combine_chunks()
-        cent = tbl.column("cent_id").to_numpy(zero_copy_only=False)
-        vid = tbl.column("vec_id").to_numpy(zero_copy_only=False)
-        d2 = tbl.column("d2").to_numpy(zero_copy_only=False)
-        vcol = tbl.column("v")
-        X = _np_matrix(
-            vcol.chunk(0) if isinstance(vcol, pa.ChunkedArray) else vcol,
-            "grouped-gemm-kernel",
-        )
-        starts = np.concatenate(
-            ([0], np.flatnonzero(cent[1:] != cent[:-1]) + 1, [len(cent)])
-        )
-        o_vid, o_n, o_mx, o_dom = [], [], [], []
-        for s, t in zip(starts[:-1], starts[1:]):
-            ids, dd, Xi = vid[s:t], d2[s:t], X[s:t]
-            n = t - s
-            nrm = np.sqrt((Xi * Xi).sum(axis=1))
-            if not nrm.all():
-                # mirror the fold kernel's contract: cosine of a
-                # zero-norm vector is an ANSI DIVIDE_BY_ZERO there, not
-                # a silent NaN-compares-False here
-                raise ValueError(
-                    "zero-norm embedding in cluster: cosine undefined"
-                )
-            for b0 in range(0, n, _GEMM_BLOCK):
-                b1 = min(b0 + _GEMM_BLOCK, n)
-                c = _round4_half_up(
-                    (Xi[b0:b1] @ Xi.T)
-                    / (nrm[b0:b1, None] * nrm[None, :])
-                )
-                mask = c >= _SEM_DUP_MIN
-                mask[np.arange(b1 - b0), np.arange(b0, b1)] = False
-                cnt = mask.sum(axis=1)
-                mx = np.where(
-                    cnt > 0,
-                    np.where(mask, c, -np.inf).max(axis=1),
-                    np.nan,
-                )
-                dom = (
-                    mask
-                    & (
-                        (dd[None, :] > dd[b0:b1, None])
-                        | (
-                            (dd[None, :] == dd[b0:b1, None])
-                            & (ids[None, :] > ids[b0:b1, None])
-                        )
+        ids = tbl.column("vec_id").to_numpy()
+        dd = tbl.column("d2").to_numpy()
+        X = _np_matrix(tbl.column("v"), "_member_flags_arrow")
+        o_n, o_mx, o_dom = [], [], []
+        for b0, c in _cos_blocks(X, X, "cluster"):
+            b1 = b0 + len(c)
+            mask = c >= _SEM_DUP_MIN
+            mask[np.arange(b1 - b0), np.arange(b0, b1)] = False
+            cnt = mask.sum(axis=1)
+            mx = np.where(
+                cnt > 0, np.where(mask, c, -np.inf).max(axis=1), np.nan
+            )
+            dom = (
+                mask
+                & (
+                    (dd[None, :] > dd[b0:b1, None])
+                    | (
+                        (dd[None, :] == dd[b0:b1, None])
+                        & (ids[None, :] > ids[b0:b1, None])
                     )
-                ).any(axis=1)
-                o_vid.append(ids[b0:b1])
-                o_n.append(cnt.astype(np.int64))
-                o_mx.append(mx)
-                o_dom.append(dom)
+                )
+            ).any(axis=1)
+            o_n.append(cnt.astype(np.int64))
+            o_mx.append(mx)
+            o_dom.append(dom)
         yield pa.RecordBatch.from_arrays(
             [
-                pa.array(np.concatenate(o_vid), type=pa.int64()),
+                pa.array(ids, type=pa.int64()),
                 pa.array(np.concatenate(o_n), type=pa.int64()),
                 # NaN marks "no dup neighbors" -> null (from_pandas=True)
                 pa.array(
@@ -2944,7 +2916,7 @@ def _member_flags_arrow(small: DataFrame) -> DataFrame:
         small.select("cent_id", "vec_id", "d2", "v"),
         "cent_id",
         [],
-        _clusters,
+        _cluster,
         "vec_id bigint, n_dup_neighbors bigint, max_cos double, "
         "dominated boolean",
     )
@@ -3228,64 +3200,37 @@ def _store_compare_arrow(nv: DataFrame, small_k: DataFrame) -> DataFrame:
 
     ``nv``: (vec_id, cent_id, v) the assigned new batch; ``small_k``:
     (vec_id, cent_id, v) stored-kept rows of in-cap clusters. Both sides
-    stream through ONE grouped mapInArrow pass as a tagged union sorted
-    (cent_id, is_new) — kept rows lead each cluster run, so the block
-    splits at the first is_new=1 row and computes round4(Xn @ K.T /
-    norms) row-blocked at _GEMM_BLOCK. Emits (vec_id, n_store_dups)
+    stream through ONE grouped_map_in_arrow pass as a tagged union, one
+    call per cluster sorted by is_new — kept rows lead, so the group
+    splits at the first is_new=1 row and _cos_blocks computes
+    round4(Xn @ K.T / norms) row-blocked. Emits (vec_id, n_store_dups)
     only for new vectors with >= 1 stored dup — exactly the fold form's
     inner-join + where(nsd > 0) relation. Clusters with no kept side
     (the fold's inner join drops them) or no new side emit nothing."""
 
-    def _clusters(tbl):
+    def _cluster(tbl):
         import numpy as np
         import pyarrow as pa
 
-        tbl = tbl.combine_chunks()
-        cent = tbl.column("cent_id").to_numpy(zero_copy_only=False)
-        vid = tbl.column("vec_id").to_numpy(zero_copy_only=False)
-        isn = tbl.column("is_new").to_numpy(zero_copy_only=False)
-        vcol = tbl.column("v")
-        X = _np_matrix(
-            vcol.chunk(0) if isinstance(vcol, pa.ChunkedArray) else vcol,
-            "grouped-gemm-kernel",
-        )
-        starts = np.concatenate(
-            ([0], np.flatnonzero(cent[1:] != cent[:-1]) + 1, [len(cent)])
-        )
+        X = _np_matrix(tbl.column("v"), "_store_compare_arrow")
+        # sorted by is_new, so the kept rows lead the group
+        nk = int(np.searchsorted(tbl.column("is_new").to_numpy(), 1))
+        if nk == 0 or nk == len(X):
+            return  # no kept side or no new side in this cluster
+        ids_n = tbl.column("vec_id").to_numpy()[nk:]
         o_vid, o_n = [], []
-        for s, t in zip(starts[:-1], starts[1:]):
-            flags = isn[s:t]
-            nk = int(np.searchsorted(flags, 1))  # kept rows lead the run
-            if nk == 0 or nk == t - s:
-                continue  # no kept side or no new side in this cluster
-            K, Xn = X[s : s + nk], X[s + nk : t]
-            ids_n = vid[s + nk : t]
-            knrm = np.sqrt((K * K).sum(axis=1))
-            nnrm = np.sqrt((Xn * Xn).sum(axis=1))
-            if not (knrm.all() and nnrm.all()):
-                # mirror the fold kernel: ANSI DIVIDE_BY_ZERO there
-                raise ValueError(
-                    "zero-norm embedding in store compare: cosine undefined"
-                )
-            m = len(Xn)
-            for b0 in range(0, m, _GEMM_BLOCK):
-                b1 = min(b0 + _GEMM_BLOCK, m)
-                c = _round4_half_up(
-                    (Xn[b0:b1] @ K.T) / (nnrm[b0:b1, None] * knrm[None, :])
-                )
-                cnt = (c >= _SEM_DUP_MIN).sum(axis=1)
-                hit = cnt > 0
-                if hit.any():
-                    o_vid.append(ids_n[b0:b1][hit])
-                    o_n.append(cnt[hit].astype(np.int64))
-        if o_vid:
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(np.concatenate(o_vid), type=pa.int64()),
-                    pa.array(np.concatenate(o_n), type=pa.int64()),
-                ],
-                names=["vec_id", "n_store_dups"],
-            )
+        for b0, c in _cos_blocks(X[nk:], X[:nk], "store compare"):
+            cnt = (c >= _SEM_DUP_MIN).sum(axis=1)
+            hit = cnt > 0
+            o_vid.append(ids_n[b0 : b0 + len(c)][hit])
+            o_n.append(cnt[hit].astype(np.int64))
+        yield pa.RecordBatch.from_arrays(
+            [
+                pa.array(np.concatenate(o_vid), type=pa.int64()),
+                pa.array(np.concatenate(o_n), type=pa.int64()),
+            ],
+            names=["vec_id", "n_store_dups"],
+        )
 
     from .operators.grouped import grouped_map_in_arrow
 
@@ -3296,7 +3241,7 @@ def _store_compare_arrow(nv: DataFrame, small_k: DataFrame) -> DataFrame:
         un,
         "cent_id",
         ["is_new"],
-        _clusters,
+        _cluster,
         "vec_id bigint, n_store_dups bigint",
     )
 

@@ -56,28 +56,27 @@ def test_groups_arrive_whole_under_aqe_replan(spark, hazard_parquet):
     sel = t.join(ok, "grp").select("grp", "row_id", "v")
 
     def _count(tbl):
-        import numpy as np
+        import pyarrow.compute as pc
 
-        tbl = tbl.combine_chunks()
-        g = tbl.column("grp").to_numpy(zero_copy_only=False)
-        starts = np.concatenate(
-            ([0], np.flatnonzero(g[1:] != g[:-1]) + 1, [len(g)])
-        )
-        ob, on = [], []
-        for s, e in zip(starts[:-1], starts[1:]):
-            ob.append(int(g[s]))
-            on.append(int(e - s))
+        # one row per call: the grouped GEMM kernels rely on each call
+        # holding exactly one group (n_keys == 1)
+        g = tbl.column("grp")
         yield pa.RecordBatch.from_arrays(
-            [pa.array(ob, type=pa.int64()), pa.array(on, type=pa.int64())],
-            names=["grp", "n"],
+            [
+                pa.array([g[0].as_py()], type=pa.int64()),
+                pa.array([tbl.num_rows], type=pa.int64()),
+                pa.array([pc.count_distinct(g).as_py()], type=pa.int64()),
+            ],
+            names=["grp", "n", "n_keys"],
         )
 
     got = grouped_map_in_arrow(
-        sel, "grp", ["row_id"], _count, "grp bigint, n bigint"
+        sel, "grp", ["row_id"], _count, "grp bigint, n bigint, n_keys bigint"
     ).collect()
-    # one emission per group, each holding ALL 60 rows — a fragmented
-    # group shows up as repeated grp rows with partial counts
-    assert len(got) == 200, f"groups fragmented: {len(got)} emissions"
+    # one call per group, each holding ALL 60 rows of ONE key — a
+    # fragmented group shows up as repeated grp rows with partial counts
+    assert len(got) == 200, f"groups fragmented: {len(got)} calls"
+    assert all(r["n_keys"] == 1 for r in got)
     assert all(r["n"] == 60 for r in got)
     assert sorted(r["grp"] for r in got) == list(range(200))
 
@@ -105,46 +104,3 @@ def test_order_cols_sorted_within_group(spark, hazard_parquet):
     assert len(got) == 200
     assert all(r["sorted_ok"] for r in got)
 
-
-def test_blocks_variant_groups_whole_and_equal(spark, hazard_parquet):
-    """grouped_blocks_in_arrow (r8): same hazard shape — groups must
-    arrive whole (pmod-hash user repartition) and a group split across
-    Arrow batches must be re-joined by the carry logic. Forcing tiny
-    Arrow batches guarantees splits occur."""
-    from ocr_dataset_builder_spark.operators.grouped import (
-        grouped_blocks_in_arrow,
-    )
-
-    t = spark.read.parquet(hazard_parquet)
-    sizes = t.groupBy("grp").agg(F.count("*").alias("n"))
-    ok = sizes.where(F.col("n") > 1).select("grp")
-    sel = t.join(ok, "grp").select("grp", "row_id", "v")
-
-    def _count(tbl):
-        import numpy as np
-
-        tbl = tbl.combine_chunks()
-        g = tbl.column("grp").to_numpy(zero_copy_only=False)
-        starts = np.concatenate(
-            ([0], np.flatnonzero(g[1:] != g[:-1]) + 1, [len(g)])
-        )
-        ob, on = [], []
-        for s, e in zip(starts[:-1], starts[1:]):
-            ob.append(int(g[s]))
-            on.append(int(e - s))
-        yield pa.RecordBatch.from_arrays(
-            [pa.array(ob, type=pa.int64()), pa.array(on, type=pa.int64())],
-            names=["grp", "n"],
-        )
-
-    old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "37")
-    try:
-        got = grouped_blocks_in_arrow(
-            sel, "grp", ["row_id"], _count, "grp bigint, n bigint"
-        ).collect()
-    finally:
-        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
-    assert len(got) == 200, f"groups fragmented: {len(got)} emissions"
-    assert all(r["n"] == 60 for r in got)
-    assert sorted(r["grp"] for r in got) == list(range(200))

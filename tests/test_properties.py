@@ -4,6 +4,7 @@ roundtrip, and the same-as-previous fill."""
 
 from __future__ import annotations
 
+import functools
 import re
 
 from hypothesis import given, settings
@@ -83,9 +84,12 @@ def test_fref_roundtrip(vals):
 # --- W1 parity against the REFERENCE reconstruction executed verbatim ---
 # pytorch_dataset.py imports torch/PIL (absent here), so the method is
 # AST-extracted and exec'd standalone — the same execute-the-reference
-# discipline test_augment.py uses for the augmentation functions.
+# discipline test_augment.py uses for the augmentation functions. Every
+# reference is loaded on first use, so a missing checkout fails the
+# parity tests that need it and leaves the others running.
 
-def _load_reference_reconstruct():
+@functools.cache
+def _ref_reconstruct():
     import ast
     import logging
     from typing import Dict, List
@@ -106,15 +110,10 @@ def _load_reference_reconstruct():
     return ns["_reconstruct_llm_output"]
 
 
-_REF_RECONSTRUCT = _load_reference_reconstruct()
-
-
-class _Shim:
-    _reconstruct_llm_output = _REF_RECONSTRUCT
-
-
 def _reference_decode(vals: list[str]) -> list[str]:
-    shim = _Shim()
+    shim = type(
+        "_Shim", (), {"_reconstruct_llm_output": _ref_reconstruct()}
+    )()
     cache: dict[int, str] = {}
     return [
         shim._reconstruct_llm_output(vals, i, cache) for i in range(len(vals))
@@ -177,17 +176,18 @@ def _load_reference_fn(path: str, name: str, ns: dict):
     return ns[name]
 
 
-_REF_CLEAN = _load_reference_fn(
+_ref_clean = functools.cache(functools.partial(
+    _load_reference_fn,
     "/root/reference/ocr_dataset_builder/tesseract/ocr_utils.py",
     "clean_tesseract_ocr",
     {"re": re},
-)
+))
 
 
 @settings(max_examples=300, deadline=None)
 @given(ascii_text)
 def test_cleanup_matches_reference_verbatim(s):
-    assert clean_ocr_text(s) == _REF_CLEAN(s)
+    assert clean_ocr_text(s) == _ref_clean()(s)
 
 
 # --- T5 parity against the REFERENCE image-response parser executed
@@ -197,7 +197,8 @@ def test_cleanup_matches_reference_verbatim(s):
 # fence), redundancy placeholders (incl. frame-0 misuse), digit-less
 # frames, duplicate task headers, and free text.
 
-def _load_reference_image_parse():
+@functools.cache
+def _ref_image_parse():
     import logging
 
     return _load_reference_fn(
@@ -206,8 +207,6 @@ def _load_reference_image_parse():
         {"re": re, "logging": logging},
     )
 
-
-_REF_IMAGE_PARSE = _load_reference_image_parse()
 
 _resp_line = st.one_of(
     st.sampled_from(
@@ -243,7 +242,7 @@ def test_image_parse_matches_reference_verbatim(resp):
         parse_image_response,
     )
 
-    assert parse_image_response(resp) == _REF_IMAGE_PARSE(resp)
+    assert parse_image_response(resp) == _ref_image_parse()(resp)
 
 
 # --- T6 parity against the REFERENCE text-refinement parser executed

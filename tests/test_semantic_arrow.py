@@ -177,6 +177,22 @@ def test_zero_norm_raises_both_backends(spark):
     for backend in ("fold", "arrow"):
         with _pt.raises(Exception, match="DIVIDE_BY_ZERO|zero-norm"):
             qc._semantic_flags_from(assign, e, backend=backend).collect()
+    # the other two grouped GEMM kernels share the guard: a zero vector
+    # in an LSH bucket, and one on either side of a store compare
+    ev = spark.createDataFrame(
+        [(1, [0.0, 0.0], 5), (2, [1.0, 0.0], 5), (3, [1.0, 0.0], 5)],
+        "vec_id bigint, v array<double>, bucket int",
+    )
+    cv = "vec_id bigint, cent_id bigint, v array<double>"
+    zero = spark.createDataFrame([(11, 1, [0.0, 0.0])], cv)
+    unit = spark.createDataFrame([(12, 1, [1.0, 0.0])], cv)
+    for got in (
+        qc._near_dup_pairs_arrow(ev),
+        qc._store_compare_arrow(zero, unit),
+        qc._store_compare_arrow(unit, zero),
+    ):
+        with _pt.raises(Exception, match="zero-norm"):
+            got.collect()
 
 
 def test_incremental_arrow_matches_fold(spark, sf_dir):
