@@ -22,8 +22,6 @@ this sandbox has none, SURVEY.md §7.4 risk 6).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -36,19 +34,23 @@ LINEAGE_SCHEMA = (
 
 
 def _read_or_empty(spark: SparkSession, path: str, schema: str) -> DataFrame:
-    """Read a parquet table, yielding an empty typed relation when the
-    path does not exist yet. The probe is the read itself (catching ONLY
-    the PATH_NOT_FOUND condition), NOT a driver-local ``os.path.exists``
-    — which is always false for hdfs://, s3a:// and any other non-local
-    URI, and would silently restart resume from zero on exactly the
-    distributed deployments this targets. Any other AnalysisException
-    (transient storage fault, corrupted/mismatched schema) re-raises:
-    treating it as "no checkpoint" would restart resume from zero and a
-    second commit would surface duplicate rows."""
+    """Read a parquet table with its declared schema, yielding an empty
+    typed relation when the path does not exist yet. The declared schema
+    spares the schema-inference job, and an existing but still-empty
+    directory reads as the empty relation instead of failing inference.
+    The probe is the read itself (catching ONLY the PATH_NOT_FOUND
+    condition), NOT a driver-local ``os.path.exists`` — which is always
+    false for hdfs://, s3a:// and any other non-local URI, and would
+    silently restart resume from zero on exactly the distributed
+    deployments this targets. Any other AnalysisException (transient
+    storage fault, corrupted schema) re-raises: treating it as "no
+    checkpoint" would restart resume from zero and a second commit would
+    surface duplicate rows. A file whose column types differ from the
+    declared ones fails when its rows are read."""
     from pyspark.errors import AnalysisException
 
     try:
-        return spark.read.parquet(path)
+        return spark.read.schema(schema).parquet(path)
     except AnalysisException as exc:
         condition = (
             exc.getCondition() if hasattr(exc, "getCondition") else exc.getErrorClass()
@@ -79,9 +81,17 @@ def read_lineage(spark: SparkSession, checkpoint_dir: str, store=None) -> DataFr
 
 
 def pending_docs(nested: DataFrame, checkpoint: DataFrame) -> DataFrame:
-    """J5 resume anti-join: inputs minus completed docs."""
-    done = checkpoint.where(F.col("status") == "done").select("doc_id").distinct()
+    """J5 resume anti-join: inputs minus completed docs. Duplicate
+    doc_ids on the right of a ``left_anti`` cannot change its result, so
+    the checkpoint side is not deduplicated (a ``distinct`` costs a
+    shuffle job per resume)."""
+    done = checkpoint.where(F.col("status") == "done").select("doc_id")
     return nested.join(done, "doc_id", "left_anti")
+
+
+def run_committed(checkpoint: DataFrame, run_id: str) -> bool:
+    """True when ``run_id`` already has rows in the checkpoint."""
+    return not checkpoint.where(F.col("run_id") == run_id).isEmpty()
 
 
 def prune_stale_checkpoint(checkpoint: DataFrame, nested: DataFrame) -> DataFrame:
@@ -102,8 +112,12 @@ def commit_run(
     ``doc_metrics`` columns: doc_id, frames_processed, ocr_chars,
     dedup_ratio. Partition id is a stable hash bucket of doc_id so a
     re-run assigns identical buckets (idempotence under retries).
+    ``doc_id`` is cast to string, the type both tables declare, so a
+    caller with numeric ids (the dedup and semantic daemons) writes
+    files that read back under the declared schema.
     """
     backend = _store(spark, checkpoint_dir, store)
+    doc_metrics = doc_metrics.withColumn("doc_id", F.col("doc_id").cast("string"))
     ck = doc_metrics.select(
         "doc_id",
         F.lit(run_id).alias("run_id"),

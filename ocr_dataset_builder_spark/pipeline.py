@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .functions.cleanup import clean_ocr_col
-from .lineage import commit_run, pending_docs, read_checkpoint
+from .lineage import commit_run, pending_docs, read_checkpoint, run_committed
 from .operators.ocr import ocr_scalar_udf
 from .synth import explode_spans  # noqa: F401 (public re-export; used by bench)
 
@@ -157,7 +157,8 @@ def run_extraction(
     an orphan run dir that :func:`read_extracted` filters out (only
     committed run_ids are visible to readers). Metrics are computed from
     the staged run dir — O(this run), never a scan of the whole output
-    history.
+    history — and the doc count is observed on the staged write, so a
+    resume runs no job of its own to count them.
 
     Committed-run guard: nothing pending is a no-op (returns 0 without
     touching storage — the everyday rerun-to-resume case), and reusing a
@@ -168,9 +169,9 @@ def run_extraction(
     """
     ck = read_checkpoint(spark, output_dir)
     pending = pending_docs(nested, ck)
-    if not pending.limit(1).count():
+    if pending.isEmpty():
         return 0
-    if ck.where(F.col("run_id") == run_id).limit(1).count():
+    if run_committed(ck, run_id):
         raise ValueError(
             f"run_id {run_id!r} is already committed in {output_dir!r} but docs "
             "are still pending; pass a fresh run_id — overwriting a committed "
@@ -179,15 +180,27 @@ def run_extraction(
     extracted = extract_spans(pending, use_arrow_ocr=use_arrow_ocr)
 
     staged = run_path(output_dir, run_id)
-    extracted.write.mode("overwrite").parquet(staged)
-
-    # schema given explicitly: a pending-empty run writes no part files
-    # and schema inference would fail on the bare directory
-    metrics = doc_metrics(spark.read.schema(extracted.schema).parquet(staged))
-    n = metrics.count()
+    n = write_counting_docs(extracted, staged)
     if n:
+        # schema given explicitly: no schema-inference job over the dir
+        metrics = doc_metrics(spark.read.schema(extracted.schema).parquet(staged))
         commit_run(spark, output_dir, run_id, metrics)
     return n
+
+
+def write_counting_docs(extracted: DataFrame, path: str) -> int:
+    """Overwrite ``path`` with ``extracted`` and return the number of
+    docs written, observed on the write itself: one ``ord = 0`` row per
+    doc with at least one span — the row count of :func:`doc_metrics`
+    over the written rows, without a job to count them. A doc with no
+    spans writes no row, is not counted and stays pending."""
+    from pyspark.sql import Observation
+
+    docs = Observation()
+    extracted.observe(
+        docs, F.count(F.when(F.col("ord") == 0, 1)).alias("docs")
+    ).write.mode("overwrite").parquet(path)
+    return docs.get["docs"]
 
 
 EXTRACTED_SCHEMA = (
@@ -205,11 +218,10 @@ def read_extracted(spark: SparkSession, output_dir: str) -> DataFrame:
     empty typed relation — same convention as the checkpoint readers."""
     from .lineage import _read_or_empty
 
+    # the declared schema types the run_id= partition column as string,
+    # also for a numeric run_id
     data = _read_or_empty(
         spark, os.path.join(output_dir, "extracted"), EXTRACTED_SCHEMA
     )
-    # partition-value inference may type a numeric run_id as int —
-    # normalize to string to match the checkpoint column
-    data = data.withColumn("run_id", F.col("run_id").cast("string"))
     committed = read_checkpoint(spark, output_dir).select("run_id").distinct()
     return data.join(F.broadcast(committed), "run_id", "left_semi")

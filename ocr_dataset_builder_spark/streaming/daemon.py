@@ -34,8 +34,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..pipeline import extract_spans, doc_metrics, run_path
-from ..lineage import commit_run
+from ..pipeline import extract_spans, doc_metrics, run_path, write_counting_docs
+from ..lineage import commit_run, read_checkpoint, run_committed
 
 NESTED_SCHEMA = (
     "doc_id string, "
@@ -50,34 +50,21 @@ def _batch_processor(output_dir: str, run_id: str, processed: dict):
     never a rescan of the whole output history."""
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark.sql import functions as F
-
-        from ..lineage import read_checkpoint
-
         if batch_df.isEmpty():
             return
+        spark = batch_df.sparkSession
         batch_run_id = f"{run_id}-b{batch_id}"
         staged = run_path(output_dir, batch_run_id)
         extracted = extract_spans(batch_df)
-        extracted.write.mode("overwrite").parquet(staged)
-        metrics = doc_metrics(
-            batch_df.sparkSession.read.schema(extracted.schema).parquet(staged)
-        )
-        n = metrics.count()
+        n = write_counting_docs(extracted, staged)
         # a batch re-delivered AFTER its commit (crash between commit and
         # the stream-checkpoint write) recomputes + overwrites its staging
         # (repairing any partial overwrite) but must not re-append the
         # checkpoint rows — a duplicate set double-counts the run for
         # lineage readers
-        already_committed = (
-            read_checkpoint(batch_df.sparkSession, output_dir)
-            .where(F.col("run_id") == batch_run_id)
-            .limit(1)
-            .count()
-            > 0
-        )
-        if n and not already_committed:
-            commit_run(batch_df.sparkSession, output_dir, batch_run_id, metrics)
+        if n and not run_committed(read_checkpoint(spark, output_dir), batch_run_id):
+            metrics = doc_metrics(spark.read.schema(extracted.schema).parquet(staged))
+            commit_run(spark, output_dir, batch_run_id, metrics)
             processed["n"] += n
 
     return _process

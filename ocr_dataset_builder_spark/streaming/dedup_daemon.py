@@ -38,7 +38,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..lineage import commit_run, read_checkpoint
+from ..lineage import _read_or_empty, commit_run, read_checkpoint, run_committed
 from ..queries_corpus import _NORM_SPARK
 from ..queries_substr import (
     _SUBSTR_W,
@@ -57,25 +57,6 @@ DEDUPED_SCHEMA = (
 INDEX_SCHEMA = "fp bigint, n_occ bigint, run_id string"
 
 
-def _read_with_schema(spark: SparkSession, path: str, schema: str) -> DataFrame:
-    """Explicit-schema read that treats a missing OR still-empty
-    directory as the empty typed relation (a brand-new index dir exists
-    before its first delta lands, so schema inference is not an option;
-    any other read error re-raises — same rationale as
-    lineage._read_or_empty)."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        return spark.read.schema(schema).parquet(path)
-    except AnalysisException as exc:
-        condition = (
-            exc.getCondition() if hasattr(exc, "getCondition") else exc.getErrorClass()
-        )
-        if condition != "PATH_NOT_FOUND":
-            raise
-        return spark.createDataFrame([], schema)
-
-
 def read_index(
     spark: SparkSession,
     index_dir: str,
@@ -86,7 +67,7 @@ def read_index(
     run deltas whose run_id reached the lineage checkpoint. The
     committed-id set is one row per batch — broadcast semi-join.
     ``exclude_run`` drops one run's own delta (see module docstring)."""
-    data = _read_with_schema(spark, index_dir, INDEX_SCHEMA)
+    data = _read_or_empty(spark, index_dir, INDEX_SCHEMA)
     committed = read_checkpoint(spark, checkpoint_dir).select("run_id").distinct()
     if exclude_run is not None:
         committed = committed.where(F.col("run_id") != exclude_run)
@@ -99,7 +80,7 @@ def read_deduped(spark: SparkSession, output_dir: str) -> DataFrame:
     """Committed-only view of the deduped output (same convention as
     pipeline.read_extracted: orphan run dirs from crashed attempts are
     invisible)."""
-    data = _read_with_schema(
+    data = _read_or_empty(
         spark, os.path.join(output_dir, "deduped"), DEDUPED_SCHEMA
     )
     committed = read_checkpoint(spark, output_dir).select("run_id").distinct()
@@ -161,14 +142,7 @@ def _dedup_batch_processor(
             # earlier replay, but the commit must not re-append — the
             # checkpoint/lineage rows exist and a duplicate set would
             # double-count the run for lineage readers
-            already_committed = (
-                read_checkpoint(spark, output_dir)
-                .where(F.col("run_id") == batch_run)
-                .limit(1)
-                .count()
-                > 0
-            )
-            if n and not already_committed:
+            if n and not run_committed(read_checkpoint(spark, output_dir), batch_run):
                 commit_run(spark, output_dir, batch_run, metrics)
                 processed["n"] += n
         finally:

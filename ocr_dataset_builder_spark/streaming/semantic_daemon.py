@@ -40,13 +40,12 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..lineage import commit_run, read_checkpoint
+from ..lineage import _read_or_empty, commit_run, read_checkpoint, run_committed
 from ..queries_corpus import (
     _trained_centroids,
     semantic_incremental_verdicts,
 )
 from .daemon import _checkpoint_run_prefix
-from .dedup_daemon import _read_with_schema
 
 EMB_SCHEMA = "vec_id bigint, embedding array<float>"
 VERDICTS_SCHEMA = (
@@ -79,7 +78,7 @@ def read_kept_store(
     """Committed-only view of the kept-store: (vec_id, cent_id, v) from
     run deltas whose run_id reached the lineage checkpoint.
     ``exclude_run`` drops one run's own delta (see module docstring)."""
-    data = _read_with_schema(spark, store_dir, KEPT_SCHEMA)
+    data = _read_or_empty(spark, store_dir, KEPT_SCHEMA)
     committed = read_checkpoint(spark, checkpoint_dir).select("run_id").distinct()
     if exclude_run is not None:
         committed = committed.where(F.col("run_id") != exclude_run)
@@ -90,7 +89,7 @@ def read_kept_store(
 
 def read_verdicts(spark: SparkSession, output_dir: str) -> DataFrame:
     """Committed-only view of the per-vector verdicts."""
-    data = _read_with_schema(
+    data = _read_or_empty(
         spark, os.path.join(output_dir, "verdicts"), VERDICTS_SCHEMA
     )
     committed = read_checkpoint(spark, output_dir).select("run_id").distinct()
@@ -112,14 +111,7 @@ def _semantic_batch_processor(
         # values. Exclude-own-delta byte-identity only holds for the
         # in-order availableNow replay; an out-of-order replay must
         # short-circuit before any write, not rely on it.
-        already_committed = (
-            read_checkpoint(spark, output_dir)
-            .where(F.col("run_id") == batch_run)
-            .limit(1)
-            .count()
-            > 0
-        )
-        if already_committed:
+        if run_committed(read_checkpoint(spark, output_dir), batch_run):
             return
         new = batch_df.select(
             "vec_id", F.col("embedding").cast("array<double>").alias("v")
@@ -161,14 +153,7 @@ def _semantic_batch_processor(
                 ),
             )
             n = metrics.count()
-            already_committed = (
-                read_checkpoint(spark, output_dir)
-                .where(F.col("run_id") == batch_run)
-                .limit(1)
-                .count()
-                > 0
-            )
-            if n and not already_committed:
+            if n and not run_committed(read_checkpoint(spark, output_dir), batch_run):
                 commit_run(spark, output_dir, batch_run, metrics)
                 processed["n"] += n
         finally:

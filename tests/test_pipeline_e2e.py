@@ -6,8 +6,10 @@ synthetic OCR + offset ordering) over the same derived rows.
 
 from __future__ import annotations
 
+import os
 import shutil
 import tempfile
+import uuid
 
 import duckdb
 import pytest
@@ -206,6 +208,96 @@ def test_read_extracted_empty_before_any_run(spark):
         df = read_extracted(spark, out)
         assert df.count() == 0
         assert "doc_id" in df.columns and "run_id" in df.columns
+    finally:
+        shutil.rmtree(out, ignore_errors=True)
+
+
+def _files(root: str) -> dict[str, tuple[int, int]]:
+    """Every file under ``root`` with its (size, mtime_ns)."""
+    out = {}
+    for d, _, names in os.walk(root):
+        for name in names:
+            st = os.stat(os.path.join(d, name))
+            out[os.path.join(d, name)] = (st.st_size, st.st_mtime_ns)
+    return out
+
+
+def _jobs_of(spark, fn):
+    """(fn(), number of Spark jobs fn ran), counted under a job group of
+    its own once the listener bus has delivered every job event."""
+    sc = spark.sparkContext
+    group = f"budget-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job budget")
+    try:
+        result = fn()
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return result, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_resume_job_budget(spark, sf_dir):
+    """A resume with pending docs runs at most 10 Spark jobs: pending
+    probe 2 (checkpoint broadcast + isEmpty), committed-run guard 1,
+    staged write 2 (broadcast + write, the doc count observed on it),
+    commit 5 (checkpoint append 2, lineage append 3). A nothing-pending
+    rerun writes no file."""
+    nested = synth.documents_spans(spark, sf_dir).cache()
+    half = nested.where(F.col("doc_id").cast("bigint") % 2 == 0)
+    out = tempfile.mkdtemp(prefix="odb_budget_")
+    try:
+        run_extraction(spark, half, out, run_id="r1")
+        n, jobs = _jobs_of(
+            spark, lambda: run_extraction(spark, nested, out, run_id="r2")
+        )
+        assert n > 0
+        assert jobs <= 10, f"resume ran {jobs} Spark jobs, budget is 10"
+
+        before = _files(out)
+        assert run_extraction(spark, nested, out, run_id="r3") == 0
+        assert _files(out) == before
+    finally:
+        shutil.rmtree(out, ignore_errors=True)
+
+
+def test_observed_doc_count_skips_empty_doc(spark, sf_dir):
+    """The doc count observed on the staged write (ord = 0 rows) equals
+    the checkpoint rows the run commits, and a pending doc with an empty
+    ``spans`` array writes no row, is not counted and stays pending."""
+    from ocr_dataset_builder_spark.lineage import pending_docs
+
+    nested = synth.documents_spans(spark, sf_dir)
+    empty = spark.createDataFrame([("empty-doc", [])], nested.schema)
+    both = nested.unionByName(empty).cache()
+    half = nested.where(F.col("doc_id").cast("bigint") % 2 == 0)
+    out = tempfile.mkdtemp(prefix="odb_observed_")
+    try:
+        run_extraction(spark, half, out, run_id="r1")
+        n = run_extraction(spark, both, out, run_id="r2")
+        ck = read_checkpoint(spark, out)
+        assert n > 0
+        assert ck.where(F.col("run_id") == "r2").count() == n
+        still = [r["doc_id"] for r in pending_docs(both, ck).collect()]
+        assert still == ["empty-doc"]
+    finally:
+        shutil.rmtree(out, ignore_errors=True)
+
+
+def test_empty_checkpoint_dir_reads_empty(spark, sf_dir):
+    """An existing but empty checkpoint directory is the empty typed
+    relation (no schema inference to fail), and a run over it commits."""
+    out = tempfile.mkdtemp(prefix="odb_emptyck_")
+    try:
+        os.makedirs(os.path.join(out, "checkpoint"))
+        ck = read_checkpoint(spark, out)
+        assert ck.count() == 0
+        assert ck.columns == ["doc_id", "run_id", "status", "committed_at"]
+        nested = synth.documents_spans(spark, sf_dir)
+        n = run_extraction(spark, nested, out, run_id="r1")
+        assert n > 0
+        assert read_checkpoint(spark, out).count() == n
     finally:
         shutil.rmtree(out, ignore_errors=True)
 
