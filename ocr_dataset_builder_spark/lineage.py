@@ -94,11 +94,6 @@ def run_committed(checkpoint: DataFrame, run_id: str) -> bool:
     return not checkpoint.where(F.col("run_id") == run_id).isEmpty()
 
 
-def prune_stale_checkpoint(checkpoint: DataFrame, nested: DataFrame) -> DataFrame:
-    """J6 validity semi-join: checkpoint entries whose doc still exists."""
-    return checkpoint.join(nested.select("doc_id"), "doc_id", "left_semi")
-
-
 def commit_run(
     spark: SparkSession,
     checkpoint_dir: str,

@@ -5,9 +5,11 @@ tesseract binary (tesseract/processing.py:53-99). This sandbox has no
 tesseract and stores no frame bytes, so the OCR function is a
 **deterministic pure function of (doc_id, media_ref, offset)** — mirroring
 Tesseract being a pure function of the frame image. What IS real is the
-Spark plumbing: the stage runs as ``mapInPandas`` over partition-local
-Arrow batches (never per-row Python), exactly where a real OCR engine
-would be invoked per batch.
+Spark plumbing: the stage runs as one scalar Arrow-vectorized pandas UDF
+(:func:`ocr_scalar_udf`, a ``pyarrow.compute`` body over whole Arrow
+batches, never per-row Python), exactly where a real OCR engine would be
+invoked per batch. ``synth.synthetic_ocr_col`` is the same function as a
+JVM expression.
 
 Failure sentinels follow tesseract/pipeline.py:83-91:
 ``<<< OCR_FAILED_EMPTY_TEXT >>>`` and ``<<< OCR_EXCEPTION: ... >>>``.
@@ -15,12 +17,9 @@ Failure sentinels follow tesseract/pipeline.py:83-91:
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType, StructField, StructType
 
 from ..synth import synthetic_ocr_col
 
@@ -31,112 +30,26 @@ OCR_EXCEPTION_PREFIX = "<<< OCR_EXCEPTION: "
 def ocr_media(media: DataFrame, use_arrow: bool = True) -> DataFrame:
     """Attach ``ocr_text`` to media-span rows.
 
-    ``use_arrow=True`` demonstrates the production path (vectorized pandas
-    batches via mapInPandas); ``use_arrow=False`` is the pure-JVM
-    expression equivalent — both produce identical output, which the tests
-    assert.
+    ``use_arrow=True`` runs the Python kernel :func:`ocr_scalar_udf`;
+    ``use_arrow=False`` is the pure-JVM expression ``synthetic_ocr_col``.
+    Both give identical output, NULL inputs included, which
+    tests/test_ocr_kernel.py asserts.
     """
-    if not use_arrow:
-        return media.withColumn(
-            "ocr_text",
-            synthetic_ocr_col(F.col("doc_id"), F.col("media_ref"), F.col("span_offset")),
-        )
-
-    # copy — StructType.add mutates in place, corrupting media's own schema
-    schema = StructType(list(media.schema.fields) + [StructField("ocr_text", StringType())])
-
-    def _ocr_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            pdf = pdf.copy()
-            # <-- a real OCR engine would decode pdf['media_ref'] payloads
-            # here, batch-wise. Deterministic stand-in. np.fmod (truncated
-            # modulo, sign of dividend) matches the JVM/DuckDB `%`, so the
-            # arrow and JVM paths agree even for negative offsets (Python's
-            # own `%` is floored and would diverge there).
-            pdf["ocr_text"] = (
-                "OCR "
-                + pdf["doc_id"].astype(str)
-                + "/"
-                + pdf["media_ref"].astype(str)
-                + "\nline "
-                + np.fmod(pdf["span_offset"], 5).astype(str)
-            )
-            yield pdf
-
-    return media.mapInPandas(_ocr_batches, schema=schema)
-
-
-def ocr_spans(flat: DataFrame, use_arrow: bool = True) -> DataFrame:
-    """OCR over a MIXED span relation in one pass: media rows get
-    ``ocr_text``, text rows get NULL. Keeping both kinds in one stage
-    avoids the split/union plan (two scans + an extra shuffle that breaks
-    doc_id partitioning ahead of the reassembly window).
-
-    The Arrow path uses ``mapInArrow`` + pyarrow.compute (C++-vectorized
-    string kernels, zero pandas materialization) — measured meaningfully
-    cheaper than the pandas equivalent at tens of millions of rows, which
-    matters because Python-side time is the shared resource that limits
-    multi-core scaling of this stage.
-    """
-    if not use_arrow:
-        return flat.withColumn(
-            "ocr_text",
-            F.when(
-                F.col("kind") == "media",
-                synthetic_ocr_col(
-                    F.col("doc_id"), F.col("media_ref"), F.col("span_offset")
-                ),
-            ),
-        )
-
-    schema = StructType(
-        list(flat.schema.fields) + [StructField("ocr_text", StringType())]
+    ocr = ocr_scalar_udf if use_arrow else synthetic_ocr_col
+    return media.withColumn(
+        "ocr_text", ocr(F.col("doc_id"), F.col("media_ref"), F.col("span_offset"))
     )
-
-    def _ocr_arrow(batches):
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        for batch in batches:
-            # <-- a real OCR engine would decode media payloads here,
-            # batch-wise; deterministic stand-in via Arrow kernels:
-            off = batch.column("span_offset")
-            line = pc.cast(
-                pc.subtract(off, pc.multiply(pc.divide(off, 5), 5)), pa.string()
-            )
-            ocr = pc.binary_join_element_wise(
-                pa.scalar("OCR "),
-                batch.column("doc_id"),
-                pa.scalar("/"),
-                pc.coalesce(batch.column("media_ref"), pa.scalar("")),
-                pa.scalar("\nline "),
-                line,
-                pa.scalar(""),
-            )
-            is_media = pc.equal(batch.column("kind"), pa.scalar("media"))
-            ocr = pc.if_else(is_media, ocr, pa.scalar(None, pa.string()))
-            yield pa.RecordBatch.from_arrays(
-                list(batch.columns) + [ocr], schema=pa.schema(schema_arrow)
-            )
-
-    import pyarrow as pa
-
-    schema_arrow = [
-        pa.field(f.name, _to_arrow(f.dataType)) for f in schema.fields
-    ]
-    return flat.mapInArrow(_ocr_arrow, schema=schema)
 
 
 def ocr_scalar_udf(doc_id: F.Column, media_ref: F.Column, off: F.Column) -> F.Column:
-    """Scalar Arrow-vectorized pandas UDF form of the OCR stand-in.
+    """Scalar Arrow-vectorized pandas UDF form of the OCR stand-in — the
+    only Python form.
 
-    Preferred in the flagship pipeline: with a scalar UDF only the
-    argument columns cross the Python boundary (ArrowEvalPython ships
-    just doc_id/media_ref/offset and receives one string column back),
-    so the document text payload never leaves the JVM. Rows where
-    media_ref is NULL (text spans) return NULL without work.
+    With a scalar UDF only the argument columns cross the Python boundary
+    (ArrowEvalPython ships just doc_id/media_ref/offset and receives one
+    string column back), so the document text payload never leaves the
+    JVM. A NULL argument gives NULL, as the JVM ``concat`` and DuckDB's
+    ``||`` do, so text spans (NULL media_ref) return NULL.
     """
     from pyspark.sql.functions import pandas_udf
 
@@ -148,40 +61,22 @@ def ocr_scalar_udf(doc_id: F.Column, media_ref: F.Column, off: F.Column) -> F.Co
         # <-- a real OCR engine would decode the referenced frame
         # payloads here, batch-wise. The string assembly runs on Arrow
         # C++ kernels (measured 2.1x faster than pandas object-dtype
-        # concat on 2M rows — this UDF is the flagship's only Python
-        # stage, so its per-batch cost is the scaling-limiting term).
-        # Integer divide-multiply-subtract = truncated modulo, matching
-        # the JVM/DuckDB `%` for negative offsets too.
-        a_doc = pa.array(doc_id_s)
-        a_ref = pa.array(ref_s)
+        # concat on 2M rows). Integer divide-multiply-subtract =
+        # truncated modulo, matching the JVM/DuckDB `%` for negative
+        # offsets too. binary_join_element_wise emits NULL for any NULL
+        # input (null_handling="emit_null").
         a_off = pa.array(off_s, type=pa.int64())
         line = pc.cast(
             pc.subtract(a_off, pc.multiply(pc.divide(a_off, 5), 5)), pa.string()
         )
-        joined = pc.binary_join_element_wise(
+        return pc.binary_join_element_wise(
             pa.scalar("OCR "),
-            a_doc,
+            pa.array(doc_id_s, type=pa.string()),
             pa.scalar("/"),
-            pc.coalesce(a_ref, pa.scalar("")),
+            pa.array(ref_s, type=pa.string()),
             pa.scalar("\nline "),
             line,
             pa.scalar(""),
-        )
-        out = pc.if_else(pc.is_valid(a_ref), joined, pa.scalar(None, pa.string()))
-        return out.to_pandas()
+        ).to_pandas()
 
     return _ocr(doc_id, media_ref, off)
-
-
-def _to_arrow(dt):
-    import pyarrow as pa
-
-    from pyspark.sql.types import IntegerType as _I, LongType as _L, StringType as _S
-
-    if isinstance(dt, _S):
-        return pa.string()
-    if isinstance(dt, _I):
-        return pa.int32()
-    if isinstance(dt, _L):
-        return pa.int64()
-    raise TypeError(f"unmapped type {dt}")

@@ -118,9 +118,3 @@ def with_batch_id(df: DataFrame, frames_per_batch: int, seq_col: str = "frame_se
     return df.withColumn(
         "batch_id", F.floor(F.col(seq_col) / F.lit(frames_per_batch)).cast("int")
     )
-
-
-def first_per_group(df: DataFrame, part_col: str, order_cols: list[str]) -> DataFrame:
-    """O6/S2: first-match pick per group (reference video/frame_pipeline.py:26-46)."""
-    w = Window.partitionBy(part_col).orderBy(*[F.col(c) for c in order_cols])
-    return df.withColumn("_rn", F.row_number().over(w)).where(F.col("_rn") == 1).drop("_rn")

@@ -25,8 +25,7 @@ from .functions.cleanup import clean_ocr_col
 from .lineage import commit_run, pending_docs, read_checkpoint, run_committed
 from .operators.ocr import ocr_scalar_udf
 from .synth import explode_spans  # noqa: F401 (public re-export; used by bench)
-
-SPAN_COLS = ["doc_id", "span_pos", "kind", "text", "media_ref", "span_offset"]
+from .synth import synthetic_ocr_col
 
 
 def extract_spans(nested: DataFrame, use_arrow_ocr: bool = True) -> DataFrame:
@@ -36,6 +35,10 @@ def extract_spans(nested: DataFrame, use_arrow_ocr: bool = True) -> DataFrame:
     the cleaned OCR text for media spans and the cleaned raw text for text
     spans. `ord` is the 0-based position in the document's span sequence —
     the invariant key (kind, text, media_ref, order).
+
+    ``use_arrow_ocr=False`` computes the OCR text with the JVM expression
+    ``synthetic_ocr_col`` instead of the Python UDF — the reference the
+    span-sequence test and the benchmark's Python-crossing probe use.
     """
     # Document order is INTRA-ROW in the contract shape (spans live in one
     # array per doc), so ordering is embarrassingly parallel: sort each
@@ -44,27 +47,25 @@ def extract_spans(nested: DataFrame, use_arrow_ocr: bool = True) -> DataFrame:
     # flagship plan contains ZERO exchanges (the earlier window variant
     # needed one shuffle; verified via explain and pinned by
     # tests/test_plan_quality.py).
-    #
-    def sorted_seq(with_text: bool = True):
-        def fields(s):
-            return F.struct(
-                s["offset"].alias("offset"),
-                s["kind"].alias("kind"),
-                s["text"].alias("text"),
-                s["media_ref"].alias("media_ref"),
-            )
-
-        sorted_spans = F.array_sort(F.transform("spans", fields))
-        return nested.select(
-            "doc_id", F.posexplode(sorted_spans).alias("ord", "span")
-        ).select(
-            "doc_id",
-            F.col("ord").cast("int").alias("ord"),
-            F.col("span.kind").alias("kind"),
-            F.col("span.text").alias("text"),
-            F.col("span.media_ref").alias("media_ref"),
-            F.col("span.offset").alias("span_offset"),
+    def fields(s):
+        return F.struct(
+            s["offset"].alias("offset"),
+            s["kind"].alias("kind"),
+            s["text"].alias("text"),
+            s["media_ref"].alias("media_ref"),
         )
+
+    sorted_spans = F.array_sort(F.transform("spans", fields))
+    seq = nested.select(
+        "doc_id", F.posexplode(sorted_spans).alias("ord", "span")
+    ).select(
+        "doc_id",
+        F.col("ord").cast("int").alias("ord"),
+        F.col("span.kind").alias("kind"),
+        F.col("span.text").alias("text"),
+        F.col("span.media_ref").alias("media_ref"),
+        F.col("span.offset").alias("span_offset"),
+    )
 
     # The OCR stand-in runs as a SCALAR Arrow-vectorized pandas UDF: only
     # the UDF's argument columns (doc_id, media_ref, offset — all narrow)
@@ -74,17 +75,9 @@ def extract_spans(nested: DataFrame, use_arrow_ocr: bool = True) -> DataFrame:
     # a single scan instead of two (the split needed a second pass over
     # the source). The identity Python crossing is this environment's
     # non-scaling resource, so bytes-through-Python is what we minimize.
-    seq = sorted_seq(with_text=True)
-    if use_arrow_ocr:
-        ocr = ocr_scalar_udf(
-            F.col("doc_id"), F.col("media_ref"), F.col("span_offset")
-        )
-    else:
-        from .synth import synthetic_ocr_col
-
-        ocr = synthetic_ocr_col(
-            F.col("doc_id"), F.col("media_ref"), F.col("span_offset")
-        )
+    ocr = (ocr_scalar_udf if use_arrow_ocr else synthetic_ocr_col)(
+        F.col("doc_id"), F.col("media_ref"), F.col("span_offset")
+    )
     return seq.select(
         "doc_id",
         "ord",
@@ -144,7 +137,6 @@ def run_extraction(
     nested: DataFrame,
     output_dir: str,
     run_id: str = "run0",
-    use_arrow_ocr: bool = True,
 ) -> int:
     """Resumable batch run: anti-join completed docs, extract, stage the
     run's output under its own ``run_id=`` partition directory, commit the
@@ -177,7 +169,7 @@ def run_extraction(
             "are still pending; pass a fresh run_id — overwriting a committed "
             "run's data directory would lose rows the checkpoint marks done"
         )
-    extracted = extract_spans(pending, use_arrow_ocr=use_arrow_ocr)
+    extracted = extract_spans(pending)
 
     staged = run_path(output_dir, run_id)
     n = write_counting_docs(extracted, staged)

@@ -422,23 +422,6 @@ FROM span_rows WHERE kind = 'text'
 SQL_AUGMENT_ASSIGN = _augment_assign_sql()
 
 
-def q_augment_profiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """U4/U5/U6: full seeded augmentation over cleaned text spans (used by
-    tests; the driver-facing contract is q_augment_assign + the byte-parity
-    pytest for the transform — the Mersenne rewrite is not SQL-expressible)."""
-    from .functions.cleanup import clean_ocr_col
-    from .operators.augment import augment_stage
-
-    text_spans = (
-        span_rows(spark, sf_dir)
-        .where("kind = 'text'")
-        .select("doc_id", "span_offset", clean_ocr_col(F.col("text")).alias("text"))
-    )
-    return augment_stage(text_spans).select(
-        "doc_id", "span_offset", "setting_id", "augmented"
-    )
-
-
 QUERIES: dict[str, tuple] = {
     "parse_image_batches": (q_parse_image_batches, SQL_PARSE_IMAGE_BATCHES),
     "refine_frames": (q_refine_frames, SQL_REFINE_FRAMES),

@@ -264,7 +264,7 @@ GROUP BY 1, 2
 
 def q_batch_assemble(spark: SparkSession, sf_dir: str) -> DataFrame:
     media = _media_seq(spark, sf_dir)
-    ocr = ocr_media(media.withColumnRenamed("media_ref", "media_ref"), use_arrow=False)
+    ocr = ocr_media(media, use_arrow=False)
     batched = seqops.with_batch_id(ocr, _FPB)
     part = F.concat(
         F.lit("--- Frame "),

@@ -7,6 +7,8 @@ silently reintroduces a shuffle or a second scan fails CI.
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from pyspark.sql import functions as F
@@ -57,15 +59,31 @@ def test_flagship_plan_has_no_exchange(spark, nested_on_disk):
     assert "Exchange" not in plan, plan
 
 
+def _ocr_udf_args(plan: str) -> list[str]:
+    """The argument columns of the plan's one Python boundary, which must
+    be the scalar OCR UDF (ArrowEvalPython, no mapInPandas/mapInArrow)."""
+    assert plan.count("ArrowEvalPython") == 1, plan
+    assert "MapInArrow" not in plan and "MapInPandas" not in plan, plan
+    (udf_line,) = [ln for ln in plan.splitlines() if "ArrowEvalPython" in ln]
+    args = re.search(r"ArrowEvalPython \[\w+\(([^()]*)\)#\d+\]", udf_line)
+    assert args, udf_line
+    return [re.sub(r"#\d+L?", "", a.strip()) for a in args.group(1).split(",")]
+
+
 def test_flagship_single_python_stage(spark, nested_on_disk):
-    """Exactly one Python boundary (the scalar OCR UDF)."""
+    """Exactly one Python boundary (the scalar OCR UDF); it receives the
+    two span fields it needs, not the span struct with its text."""
     plan = _executed_plan(extract_spans(nested_on_disk))
-    n_py = (
-        plan.count("ArrowEvalPython")
-        + plan.count("MapInArrow")
-        + plan.count("MapInPandas")
-    )
-    assert n_py == 1, plan
+    assert _ocr_udf_args(plan) == ["doc_id", "span.media_ref", "span.offset"], plan
+
+
+def test_media_frames_single_python_stage(spark, sf_dir):
+    """q_media_frames crosses into Python through the same scalar OCR UDF
+    only, with just its three argument columns — no whole-row batches."""
+    from ocr_dataset_builder_spark.queries_spans import q_media_frames
+
+    plan = _executed_plan(q_media_frames(spark, sf_dir))
+    assert _ocr_udf_args(plan) == ["doc_id", "media_ref", "span_offset"], plan
 
 
 def test_flagship_single_scan_and_no_text_through_python(spark, nested_on_disk):
