@@ -26,6 +26,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .synth import load_embeddings as _emb
+from .synth import load_flat_documents as _docs
+
 # ---------------------------------------------------------------------------
 # shared fragments
 # ---------------------------------------------------------------------------
@@ -39,14 +42,6 @@ _HEX15_SQL = lambda e: f"('0x' || substr(md5({e}), 1, 15))::BIGINT"  # noqa: E73
 
 def _hex15(c: F.Column) -> F.Column:
     return F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("bigint")
-
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-
-def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
 
 
 def _norm_docs(
@@ -95,23 +90,23 @@ sh AS (
 )"""
 
 
-def positional_ngrams(t: F.Column, n: int) -> F.Column:
-    """Word n-grams in start order WITH multiplicity — element i
-    (0-based) is the window starting at token i. Built via zip_with over
-    shifted slices: each slice argument evaluates once per row
-    (element_at inside a transform lambda re-evaluates the split per
-    element — O(tokens^2) regex work, measured as the dominant cost of
-    the shingle stages)."""
-    ln = F.greatest(F.size(t) - (n - 1), F.lit(0))
-    grams = F.slice(t, 1, ln)
+def positional_ngrams(t: str, n: int) -> F.Column:
+    """Word n-grams in start order WITH multiplicity over the token-array
+    column named ``t`` — element i (0-based) is the window starting at
+    token i. Built via zip_with over shifted slices: each slice argument
+    evaluates once per row (element_at inside a transform lambda
+    re-evaluates the split per element — O(tokens^2) regex work,
+    measured as the dominant cost of the shingle stages). Built from SQL
+    text, one expression instead of n-1 PySpark lambdas (each a round of
+    JVM calls on the driver)."""
+    ln = f"greatest(size({t}) - {n - 1}, 0)"
+    grams = f"slice({t}, 1, {ln})"
     for k in range(1, n):
-        grams = F.zip_with(
-            grams, F.slice(t, k + 1, ln), lambda a, b: F.concat(a, F.lit(" "), b)
-        )
-    return grams
+        grams = f"zip_with({grams}, slice({t}, {k + 1}, {ln}), (a, b) -> concat(a, ' ', b))"
+    return F.expr(grams)
 
 
-def word_ngrams(t: F.Column, n: int) -> F.Column:
+def word_ngrams(t: str, n: int) -> F.Column:
     """Distinct word n-grams (the shingle form: position and
     multiplicity dropped)."""
     return F.array_distinct(positional_ngrams(t, n))
@@ -168,7 +163,9 @@ def _barrier(df: DataFrame) -> DataFrame:
     return df.checkpoint()
 
 
-def _nearest_ranked(d2: DataFrame, rank_max: int) -> DataFrame:
+def _nearest_ranked(
+    d2: DataFrame, rank_max: int, carry: tuple[str, ...] = ()
+) -> DataFrame:
     """Rank a (vec_id, cent_id, d2) relation to the ``rank_max`` nearest
     per vector. ``rank_max == 1`` (every trainer/assign call in the
     module) is a min-struct partial aggregation — map-side combined,
@@ -177,14 +174,22 @@ def _nearest_ranked(d2: DataFrame, rank_max: int) -> DataFrame:
     (d2 asc, then cent_id asc, nulls first) is exactly the window
     form's ``orderBy(d2.asc, cent_id.asc)`` with row_number == 1, so
     values and tie-breaks are identical (pinned by the driver oracle).
-    ``rank_max > 1`` keeps the row_number window."""
+    ``rank_max > 1`` keeps the row_number window.
+
+    ``carry`` names per-vector columns (the vector ``v`` for a Lloyd
+    step) that ride along to the output. They are appended to the
+    struct AFTER cent_id, which is unique per vector, so they never
+    decide the min."""
     if rank_max == 1:
-        m = d2.groupBy("vec_id").agg(F.min(F.struct("d2", "cent_id")).alias("m"))
+        m = d2.groupBy("vec_id").agg(
+            F.min(F.struct("d2", "cent_id", *carry)).alias("m")
+        )
         return m.select(
             "vec_id",
             F.col("m.cent_id").alias("cent_id"),
             F.col("m.d2").alias("d2"),
             F.lit(1).alias("rnk"),
+            *[F.col(f"m.{c}").alias(c) for c in carry],
         )
     w = Window.partitionBy("vec_id").orderBy(
         F.col("d2").asc(), F.col("cent_id").asc()
@@ -206,7 +211,7 @@ def _shingles(
         nd = _norm_docs(spark, sf_dir, spread=False)
     nd = nd.withColumn("t", F.split("norm", " "))
     return nd.select(
-        "doc_id", F.explode(word_ngrams(F.col("t"), 3)).alias("shingle")
+        "doc_id", F.explode(word_ngrams("t", 3)).alias("shingle")
     )
 
 
@@ -1116,9 +1121,10 @@ _STOPWORDS = ("the", "a", "and", "of", "to", "in")
 
 def q_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     nd = _norm_docs(spark, sf_dir).withColumn("t", F.split("norm", " "))
-    sw = list(_STOPWORDS)
     n_tokens = F.size("t")
-    stop_hits = F.size(F.filter("t", lambda x: x.isin(sw)))
+    stop_hits = F.expr(
+        "size(filter(t, x -> x IN ({})))".format(", ".join(f"'{w}'" for w in _STOPWORDS))
+    )
     nospace = F.regexp_replace("norm", " ", "")
     alpha = F.regexp_replace("norm", "[^a-z]", "")
     avg_len = F.col("_nchars") / n_tokens
@@ -1775,24 +1781,8 @@ def _ivf_assign(spark: SparkSession, sf_dir: str, rank_max: int) -> DataFrame:
     list_reduce (probed + pinned by the driver hash), so the oracle
     stays value-exact without the DECIMAL(35,9) arithmetic that made
     this the slowest bench query in round 1 (7.6 s -> see BENCH)."""
-    e = _emb(spark, sf_dir).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
-    cent = e.where(F.col("vec_id") % _IVF_CENTROID_MOD == 0).select(
-        F.col("vec_id").alias("cent_id"), F.col("v").alias("cv")
-    )
-    d2_expr = F.aggregate(
-        F.zip_with("v", "cv", lambda a, b: (a - b) * (a - b)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    # same r8 shape as _assign_to: spread the fold (round-robin, so the
-    # fold stays below the agg/window exchange and is ReusedExchange-
-    # dedupable), rank without a sort when only the nearest is needed
-    d2 = _spread(e, "vec_id").crossJoin(F.broadcast(cent)).select(
-        "vec_id", "cent_id", d2_expr.alias("d2")
-    )
-    return _nearest_ranked(d2, rank_max)
+    e = _vectors(spark, sf_dir)
+    return _assign_to(e, _seed_centroids(e), rank_max)
 
 
 def q_ann_ivf_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1942,11 +1932,18 @@ _KM_ITERS = 3  # fixed iteration count -> deterministic, oracle-expressible
 _KM_MAX_ITERS = 64  # loud backstop for the tolerance-driven variant
 
 
-def _centroid_means(assign: DataFrame, e: DataFrame) -> DataFrame:
-    """New centroids from an assignment: per-(cent_id, dim) DECIMAL-exact
-    means rounded to 6 dp, re-assembled into dim-ordered arrays."""
+def _centroid_means(assign: DataFrame) -> DataFrame:
+    """New centroids from an assignment that carries each vector:
+    (cent_id, v) -> (cent_id, cv), per-(cent_id, dim) DECIMAL-exact
+    means rounded to 6 dp, re-assembled into dim-ordered arrays.
+
+    The assignment carries ``v`` (see _lloyd_step), so the means read
+    no second copy of the vectors: a ``join(e, "vec_id")`` back to them
+    makes Spark inject a runtime bloom filter over the vector scan — a
+    two-job ``bloom_filter_agg`` subquery per iteration and a 1 MiB
+    filter inlined into every task binary."""
     dec = lambda c: F.round(c.cast("double"), 9).cast("decimal(25,9)")  # noqa: E731
-    # r8: hash-spread the n-row assignment by cent_id BEFORE the join +
+    # r8: hash-spread the n-row assignment by cent_id BEFORE the
     # posexplode. hash(cent_id) satisfies the ClusteredDistribution of
     # BOTH downstream groupBys ((cent_id, dim) and (cent_id)), so the
     # per-dim decimal sums and the array re-assembly run with ZERO
@@ -1956,7 +1953,7 @@ def _centroid_means(assign: DataFrame, e: DataFrame) -> DataFrame:
     # changed row routing cannot move a value. force=True: this spread
     # exists for its KEY layout, which the partition-count heuristic
     # cannot see (interleaved A/B: 0.87 -> 0.36 s per means force).
-    vals = _spread(assign, "cent_id", force=True).join(e, "vec_id").select(
+    vals = _spread(assign, "cent_id", force=True).select(
         "cent_id", F.posexplode("v").alias("dim", "val")
     )
     per = vals.groupBy("cent_id", "dim").agg(
@@ -1965,15 +1962,24 @@ def _centroid_means(assign: DataFrame, e: DataFrame) -> DataFrame:
         ).alias("nv")
     )
     return per.groupBy("cent_id").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("dim", "nv"))),
-            lambda s: s["nv"],
-        ).alias("cv")
+        F.expr("transform(array_sort(collect_list(struct(dim, nv))), s -> s.nv)")
+        .alias("cv")
     )
 
 
+# squared L2 distance of (v, cv) as the in-row sequential double fold.
+# Built from SQL text: the same analyzed expression as
+# F.aggregate(F.zip_with(...)), without PySpark's per-lambda JVM round
+# trips (~20 ms per higher-order function on the driver, per call).
+_D2_FOLD = "aggregate(zip_with(v, cv, (a, b) -> (a - b) * (a - b)), 0D, (acc, x) -> acc + x)"
+
+
 def _assign_to(
-    e: DataFrame, cent: DataFrame, rank_max: int, backend: str = "fold"
+    e: DataFrame,
+    cent: DataFrame,
+    rank_max: int,
+    backend: str = "fold",
+    carry_v: bool = False,
 ) -> DataFrame:
     """Nearest-``rank_max`` centroid assignment.
 
@@ -1994,14 +2000,12 @@ def _assign_to(
     only in the last ulp (different summation order), so ties at equal
     d2 break identically (cent_id asc) but a near-tie can flip — which
     is why registered oracle queries keep the fold. Pinned equal on the
-    test fixtures by tests/test_kmeans_arrow.py."""
+    test fixtures by tests/test_kmeans_arrow.py.
+
+    ``carry_v=True`` adds each vector's ``v`` to the output (both
+    backends), which is what a Lloyd step's means read."""
     if backend == "arrow":
-        return _assign_to_arrow(e, cent, rank_max)
-    d2_expr = F.aggregate(
-        F.zip_with("v", "cv", lambda a, b: (a - b) * (a - b)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+        return _assign_to_arrow(e, cent, rank_max, carry_v)
     # _spread BEFORE the broadcast crossJoin: the O(n*k) interpreted
     # folds then run on shuffle-partition-count tasks instead of the
     # scan's task count (1 at bench scale — measured 0.88 s -> 0.23 s
@@ -2011,10 +2015,11 @@ def _assign_to(
     # No shuffle boundary sits above the fold, so exchange reuse cannot
     # dedup it — plans that reference the assignment more than once
     # (semantic_prep/flags: 3-5x) put it behind _barrier instead.
+    carry = ("v",) if carry_v else ()
     d2 = _spread(e, "vec_id").crossJoin(F.broadcast(cent)).select(
-        "vec_id", "cent_id", d2_expr.alias("d2")
+        "vec_id", "cent_id", F.expr(_D2_FOLD).alias("d2"), *carry
     )
-    return _nearest_ranked(d2, rank_max)
+    return _nearest_ranked(d2, rank_max, carry)
 
 
 def _np_matrix(varr, where: str):
@@ -2053,7 +2058,9 @@ def _np_matrix(varr, where: str):
     return flat.reshape(widths.size, int(widths[0]))
 
 
-def _assign_to_arrow(e: DataFrame, cent: DataFrame, rank_max: int) -> DataFrame:
+def _assign_to_arrow(
+    e: DataFrame, cent: DataFrame, rank_max: int, carry_v: bool = False
+) -> DataFrame:
     import numpy as np
 
     rows = cent.collect()
@@ -2064,6 +2071,10 @@ def _assign_to_arrow(e: DataFrame, cent: DataFrame, rank_max: int) -> DataFrame:
     cn2 = (C * C).sum(axis=1)
     k = len(ids)
     r = min(rank_max, k)
+    names = ["vec_id", "cent_id", "d2", "rnk"] + (["v"] if carry_v else [])
+    schema = "vec_id bigint, cent_id bigint, d2 double, rnk int"
+    if carry_v:
+        schema += ", v array<double>"
 
     def _batches(it):
         import pyarrow as pa
@@ -2091,22 +2102,17 @@ def _assign_to_arrow(e: DataFrame, cent: DataFrame, rank_max: int) -> DataFrame:
                 j = np.argsort(d2, axis=1, kind="stable")[:, :r]
             rows_idx = np.repeat(np.arange(len(vid)), r)
             cols = j.reshape(-1)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(np.repeat(vid, r), type=pa.int64()),
-                    pa.array(ids[cols], type=pa.int64()),
-                    pa.array(d2[rows_idx, cols], type=pa.float64()),
-                    pa.array(
-                        np.tile(np.arange(1, r + 1), len(vid)),
-                        type=pa.int32(),
-                    ),
-                ],
-                names=["vec_id", "cent_id", "d2", "rnk"],
-            )
+            out = [
+                pa.array(np.repeat(vid, r), type=pa.int64()),
+                pa.array(ids[cols], type=pa.int64()),
+                pa.array(d2[rows_idx, cols], type=pa.float64()),
+                pa.array(np.tile(np.arange(1, r + 1), len(vid)), type=pa.int32()),
+            ]
+            if carry_v:
+                out.append(batch.column("v").take(pa.array(rows_idx)))
+            yield pa.RecordBatch.from_arrays(out, names=names)
 
-    return e.select("vec_id", "v").mapInArrow(
-        _batches, schema="vec_id bigint, cent_id bigint, d2 double, rnk int"
-    )
+    return e.select("vec_id", "v").mapInArrow(_batches, schema=schema)
 
 
 def _vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2114,6 +2120,21 @@ def _vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _emb(spark, sf_dir).select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
+
+
+def _seed_centroids(e: DataFrame) -> DataFrame:
+    """The deterministic seeds: every vector with vec_id % 50 == 0."""
+    return e.where(F.col("vec_id") % _IVF_CENTROID_MOD == 0).select(
+        F.col("vec_id").alias("cent_id"), F.col("v").alias("cv")
+    )
+
+
+def _lloyd_step(e: DataFrame, cent: DataFrame, backend: str = "fold") -> DataFrame:
+    """One Lloyd iteration, (vec_id, v) x (cent_id, cv) -> the next
+    (cent_id, cv): the nearest-centroid assignment carries each vector's
+    ``v`` (``carry_v``), and the decimal-exact means read it from there.
+    The one step of both trainers, for both backends."""
+    return _centroid_means(_assign_to(e, cent, 1, backend=backend, carry_v=True))
 
 
 def _trained_centroids(
@@ -2125,34 +2146,32 @@ def _trained_centroids(
 ) -> tuple[DataFrame, DataFrame]:
     """(vectors, centroids-after-iters). The trainer loop is driver-side
     — iterative algorithms are the one legitimate driver loop (same
-    pattern as near_dup_components): each iteration is a full
-    distributed Lloyd step, and the tiny centroid table passes through
-    _barrier per iteration so the lineage (and the broadcast
-    plan feeding the next step) stays flat instead of growing a
-    crossJoin chain the optimizer must re-expand every round.
+    pattern as near_dup_components): each iteration is one _lloyd_step,
+    and the tiny centroid table passes through _barrier per iteration so
+    the lineage (and the broadcast plan feeding the next step) stays
+    flat instead of growing a crossJoin chain the optimizer must
+    re-expand every round. A step reads the vectors once: the scan, the
+    vec_id spread, the broadcast crossJoin with the distance fold and
+    the per-vector min run in one stage, then one cent_id exchange
+    feeds the means: 4 Spark jobs per iteration.
     ``e`` overrides the (vec_id, v) training relation — the incremental
     query trains on the STORE subset only."""
     if e is None:
         e = _vectors(spark, sf_dir)
-    cent = e.where(F.col("vec_id") % _IVF_CENTROID_MOD == 0).select(
-        F.col("vec_id").alias("cent_id"), F.col("v").alias("cv")
-    )
+    cent = _seed_centroids(e)
     if iters > _KM_MAX_ITERS:
         raise ValueError(
             f"kmeans iters={iters} > backstop {_KM_MAX_ITERS}; "
             "raise _KM_MAX_ITERS deliberately if you mean it"
         )
     for _ in range(iters):
-        assign = _assign_to(e, cent, 1, backend=backend).select(
-            "vec_id", "cent_id"
-        )
         # per-iteration barrier: keeps the lineage flat AND pays for
         # each Lloyd step exactly once. (r8 re-measured the
         # NO-checkpoint alternative — one action runs the unrolled
         # chain: every downstream reference re-executes the trainer
         # subtree (broadcast-exchange reuse does NOT rescue it) and the
         # family got 20-85% slower; see OPTIMIZATION_r08.md.)
-        cent = _barrier(_centroid_means(assign, e))
+        cent = _barrier(_lloyd_step(e, cent, backend))
     return e, cent
 
 
@@ -2190,29 +2209,14 @@ def train_kmeans_converged(
     driver oracle must be deterministic and SQL-unrollable; this variant
     is the production entry point and is pinned by pytest against the
     fixed-count path (same centroids when it converges in <= _KM_ITERS)."""
-    e = _emb(spark, sf_dir).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
-    cent = e.where(F.col("vec_id") % _IVF_CENTROID_MOD == 0).select(
-        F.col("vec_id").alias("cent_id"), F.col("v").alias("cv")
-    )
+    e = _vectors(spark, sf_dir)
+    cent = _seed_centroids(e)
     history: list[float] = []
     for it in range(1, max_iters + 1):
-        assign = _assign_to(e, cent, 1).select("vec_id", "cent_id")
-        new_cent = _barrier(_centroid_means(assign, e))
-        move_expr = F.aggregate(
-            F.zip_with("cv", "ncv", lambda a, b: (a - b) * (a - b)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
+        new_cent = _barrier(_lloyd_step(e, cent))
         moved = (
-            cent.join(
-                new_cent.select(
-                    "cent_id", F.col("cv").alias("ncv")
-                ),
-                "cent_id",
-            )
-            .select(move_expr.alias("m"))
+            cent.join(new_cent.withColumnRenamed("cv", "v"), "cent_id")
+            .select(F.expr(_D2_FOLD).alias("m"))
             .agg(F.max("m").alias("worst"))
             .collect()[0]["worst"]
         )
@@ -2670,149 +2674,177 @@ def _semantic_flags(
     comparison is engine-deterministic.
 
     Scale shape: trainer as in q_kmeans_train (tiny centroid table
-    broadcast per Lloyd step), one assign, one cluster-size guard
-    (broadcast), one self-join keyed on cent_id carrying vectors only
-    for in-cap clusters, in-row double-fold cosine, one per-vector agg.
-    No window over a skewable key anywhere.
+    broadcast per Lloyd step), one assign carrying the vectors, one
+    per-cluster aggregate (broadcast), one cent_id exchange feeding the
+    member lists of in-cap clusters, in-row double-fold cosine per
+    member. No window over a skewable key anywhere.
 
     ``backend="arrow"`` (production) routes BOTH the trainer/assignment
     (the _assign_to GEMM) and the within-cluster member cosine
     (_member_flags_arrow's per-cluster GEMM) through numpy; registered
     oracle queries keep the default fold."""
     e, cent = _vectors_and_centroids(spark, sf_dir, centroids, backend)
-    # _barrier: _semantic_flags_from + _semantic_flags_tail reference the
-    # assignment 3x; without it each reference re-runs the O(n*k) fold
-    assign = _barrier(
-        _assign_to(e, cent, 1, backend=backend).select(
-            "vec_id", "cent_id", "d2"
-        )
+    # _barrier: _semantic_flags_from reads the assignment 3x; without it
+    # each read re-runs the O(n*k) fold
+    assign = _barrier(_assign_to(e, cent, 1, backend=backend, carry_v=True))
+    return _semantic_flags_from(assign, backend=backend)
+
+
+def _cluster_stats(assign: DataFrame) -> DataFrame:
+    """(cent_id, cn, mean_d2) of a 1-NN assignment: ONE partial
+    aggregate per cluster gives both the SemDeDup size cap (cn) and the
+    prototype rule's mean distance (mean_d2). The mean uses the kmeans
+    discipline: DECIMAL(25,9) sum of round(d2, 9), cast to double,
+    divided, rounded to 6 dp — float aggregation order would differ
+    between engines; this is bit-identical both sides. Callers that
+    need only cn get a count-only aggregate (column pruning)."""
+    dec = lambda c: F.round(c.cast("double"), 9).cast("decimal(25,9)")  # noqa: E731
+    return assign.groupBy("cent_id").agg(
+        F.count("*").alias("cn"),
+        F.round(
+            F.sum(dec(F.col("d2"))).cast("double") / F.count("*"), 6
+        ).alias("mean_d2"),
     )
-    return _semantic_flags_from(assign, e, backend=backend)
+
+
+def _keep_proto() -> F.Column:
+    """The prototype verdict of a row carrying d2 and its cluster's
+    mean_d2 (see _PROTO_ALPHA)."""
+    return (F.col("d2") > F.lit(_PROTO_ALPHA) * F.col("mean_d2")).alias(
+        "keep_proto"
+    )
+
+
+# The per-member SemDeDup verdict of member ``me`` against its cluster's
+# member list ``ms`` (structs b_id, b_d2, bv, b_n2): map each member to
+# (cos, b_d2, b_id) — cos evaluated exactly once — keep the duplicate
+# neighbors, then fold count / max / dominated over cheap scalars. SQL
+# text instead of F.transform/F.aggregate lambdas: the same analyzed
+# expression without PySpark's per-lambda JVM round trips on the driver.
+_MEMBER_VERDICT = f"""aggregate(
+  filter(
+    transform(ms, m -> struct(
+      round(aggregate(zip_with(me.bv, m.bv, (x, y) -> x * y), 0D,
+                      (acc, x) -> acc + x) / sqrt(me.b_n2 * m.b_n2), 4) AS cos,
+      m.b_d2 AS b_d2,
+      m.b_id AS b_id)),
+    c -> c.b_id != me.b_id AND c.cos >= {_SEM_DUP_MIN}D),
+  struct(CAST(0 AS BIGINT) AS n, CAST(NULL AS DOUBLE) AS mx, false AS dom),
+  (acc, c) -> struct(
+    acc.n + CAST(1 AS BIGINT) AS n,
+    greatest(acc.mx, c.cos) AS mx,
+    acc.dom OR c.b_d2 > me.b_d2 OR (c.b_d2 = me.b_d2 AND c.b_id > me.b_id) AS dom))"""
+_N2_FOLD = "aggregate(transform(v, x -> x * x), 0D, (acc, x) -> acc + x)"
 
 
 def _semantic_flags_from(
-    assign: DataFrame, e: DataFrame, backend: str = "fold"
+    assign: DataFrame,
+    e: DataFrame | None = None,
+    backend: str = "fold",
+    keep_proto: bool = False,
 ) -> DataFrame:
     """The SemDeDup verdict over a given 1-NN assignment (shared by the
-    standalone query and the q_semantic_prep composition).
+    standalone query, q_semantic_prep and the incremental family):
+    (vec_id, cent_id, n_dup_neighbors, max_cos, keep), plus the
+    prototype verdict ``keep_proto`` when asked for — both from the one
+    per-cluster aggregate of _cluster_stats, computed per row in the
+    same projection, so no per-vector join ever brings a verdict back.
+
+    The vectors come from ``e`` (vec_id, v) joined on vec_id, or, with
+    ``e=None``, from the assignment itself (``_assign_to(...,
+    carry_v=True)``). Every package caller carries them: a join back to
+    a FILTERED vector scan (the incremental family's store and batch
+    subsets) makes Spark inject a runtime bloom filter, a two-job
+    subquery plus a 1 MiB filter inlined into every task binary.
+
+    Members of over-cap clusters (cn > _SEM_CLUSTER_CAP) skip the
+    quadratic: n=0 / keep=true / max_cos null, identical for both
+    kernels. The in-cap and over-cap rows read the same
+    assign x broadcast(stats) relation with the same columns, so the
+    stats aggregate runs once (exchange reuse). Cluster sizes count the
+    ASSIGNMENT, as the oracle's csize CTE does.
 
     Shape (round 6): the within-cluster quadratic is ONE in-row fold per
-    vector over its cluster's collected member list — not a pair join.
-    The previous a.join(b, "cent_id") + groupBy(vec_id) form materialized
-    the full pair stream through two shuffles, and AQE sized the probe
-    side by its INPUT bytes, blind to the C(n,2) expansion: at 108k
-    replicated vectors the whole quadratic ran on 1-3 tasks (measured by
-    scripts/scaling_emb.py; stack-sampled to the cosine predicate). Here
-    the expansion happens inside a projection, parallelism follows the
-    member-list join (cent_id keys >> cores, skew bounded by
-    _SEM_CLUSTER_CAP), per-vector aggregates (count / max / exists) are
-    order-independent so collect_list nondeterminism cannot leak, and
-    each member's squared norm is computed once per cluster instead of
-    once per pair (the old form paid three folds per pair, this pays
-    one). Values are bit-identical: same sequential double folds, same
-    round(.,4), same tie-break.
+    member over its cluster's collected member list — not a pair join.
+    A pair join materializes the full pair stream through two shuffles,
+    and AQE sized the probe side by its INPUT bytes, blind to the C(n,2)
+    expansion: at 108k replicated vectors the whole quadratic ran on
+    1-3 tasks (measured by scripts/scaling_emb.py; stack-sampled to the
+    cosine predicate). Here the member list is collected per cluster and
+    exploded back to one row per member in the same stage, so the
+    cent_id spread is the one exchange; parallelism follows it (cent_id
+    keys >> cores, skew bounded by _SEM_CLUSTER_CAP). Per-member
+    aggregates (count / max / exists) are order-independent so
+    collect_list nondeterminism cannot leak, and each member's squared
+    norm is computed once per cluster. Values are bit-identical: same
+    sequential double folds, same round(.,4), same tie-break.
 
     ``backend="arrow"`` (round 7, the production path for real vector
     volume): the per-cluster quadratic runs as ONE numpy GEMM per
-    cluster inside a grouped mapInArrow pass — see _member_flags_arrow.
+    cluster inside a grouped applyInArrow pass — see _member_flags_arrow.
     The 108k-vector harness measured the interpreted fold at 0.31-0.65
     scaling efficiency 8->16 cores (allocation-bound); the GEMM keeps
     the same plan shape but does the n_c^2*dim multiplies in BLAS."""
-    ev = assign.join(e, "vec_id")
-    csize = ev.groupBy("cent_id").agg(F.count("*").alias("cn"))
-    small = ev.join(
-        F.broadcast(
-            csize.where(F.col("cn") <= _SEM_CLUSTER_CAP).select("cent_id")
-        ),
+    a = assign.join(F.broadcast(_cluster_stats(assign)), "cent_id")
+    extra = [_keep_proto()] if keep_proto else []
+    extra_cols = ["keep_proto"] if keep_proto else []
+    over = a.where(F.col("cn") > _SEM_CLUSTER_CAP).select(
+        "vec_id",
         "cent_id",
+        F.lit(0).cast("bigint").alias("n_dup_neighbors"),
+        F.lit(None).cast("double").alias("max_cos"),
+        F.lit(True).alias("keep"),
+        *extra,
     )
+    small = a.where(F.col("cn") <= _SEM_CLUSTER_CAP)
+    if e is None:
+        small = small.select("vec_id", "cent_id", "d2", *extra, "v")
+    else:
+        small = small.select("vec_id", "cent_id", "d2", *extra).join(e, "vec_id")
     if backend == "arrow":
-        flags = _member_flags_arrow(small)
-        return _semantic_flags_tail(assign, flags)
-    # _spread on cent_id (r8): the quadratic member-cosine fold below is
-    # a projection over the small x members join — AQE coalesces that
-    # join's tiny-by-bytes shuffles to ~1 partition and serializes the
-    # fold; the explicit numbered repartition pins the join layout at
-    # shuffle-partition count (parallelism = #clusters, skew bounded by
-    # _SEM_CLUSTER_CAP as before)
-    small = _spread(
-        small.withColumn("n2", _n2_double(F.col("v"))), "cent_id", force=True
-    )
-    members = small.groupBy("cent_id").agg(
-        F.collect_list(
-            F.struct(
-                F.col("vec_id").alias("b_id"),
-                F.col("d2").alias("b_d2"),
-                F.col("v").alias("bv"),
-                F.col("n2").alias("b_n2"),
+        flags = _member_flags_arrow(small, extra_cols)
+    else:
+        # _spread on cent_id (r8): AQE coalesces the tiny-by-bytes member
+        # relation to ~1 partition and would serialize the quadratic
+        # fold; the explicit numbered repartition pins the layout at
+        # shuffle-partition count (parallelism = #clusters). The
+        # collect_list groupBy then needs no further exchange.
+        members = (
+            _spread(small.withColumn("n2", F.expr(_N2_FOLD)), "cent_id", force=True)
+            .groupBy("cent_id")
+            .agg(
+                F.collect_list(
+                    F.struct(
+                        F.col("vec_id").alias("b_id"),
+                        F.col("d2").alias("b_d2"),
+                        F.col("v").alias("bv"),
+                        F.col("n2").alias("b_n2"),
+                        *extra_cols,
+                    )
+                ).alias("ms")
             )
-        ).alias("ms")
-    )
-
-    def member_cos(m: F.Column) -> F.Column:
-        return F.round(
-            _fold_double(F.zip_with(F.col("v"), m["bv"], lambda x, y: x * y))
-            / F.sqrt(F.col("n2") * m["b_n2"]),
-            4,
         )
-
-    # one pass: map each member to (cos, b_d2, b_id) — cos evaluated
-    # exactly once — filter to dup neighbors, then fold count/max/any
-    # over cheap scalars (referencing the mapped array once keeps the
-    # interpreted HOF from being re-evaluated per output column)
-    dups = F.filter(
-        F.transform(
-            F.col("ms"),
-            lambda m: F.struct(
-                member_cos(m).alias("cos"),
-                m["b_d2"].alias("b_d2"),
-                m["b_id"].alias("b_id"),
-            ),
-        ),
-        lambda c: (c["b_id"] != F.col("vec_id"))
-        & (c["cos"] >= F.lit(_SEM_DUP_MIN)),
-    )
-    agg = F.aggregate(
-        dups,
-        F.struct(
-            F.lit(0).cast("bigint").alias("n"),
-            F.lit(None).cast("double").alias("mx"),
-            F.lit(False).alias("dom"),
-        ),
-        lambda acc, c: F.struct(
-            (acc["n"] + F.lit(1).cast("bigint")).alias("n"),
-            F.greatest(acc["mx"], c["cos"]).alias("mx"),
-            (
-                acc["dom"]
-                | (c["b_d2"] > F.col("d2"))
-                | ((c["b_d2"] == F.col("d2")) & (c["b_id"] > F.col("vec_id")))
-            ).alias("dom"),
-        ),
-    )
-    flags = (
-        small.join(members, "cent_id")
-        .withColumn("sem", agg)
-        .select(
-            "vec_id",
-            F.col("sem.n").alias("n_dup_neighbors"),
-            F.col("sem.mx").alias("max_cos"),
-            F.col("sem.dom").alias("dominated"),
+        flags = (
+            members.select("cent_id", "ms", F.explode("ms").alias("me"))
+            .withColumn("sem", F.expr(_MEMBER_VERDICT))
+            .select(
+                F.col("me.b_id").alias("vec_id"),
+                "cent_id",
+                F.col("sem.n").alias("n_dup_neighbors"),
+                F.col("sem.mx").alias("max_cos"),
+                F.col("sem.dom").alias("dominated"),
+                *[F.col(f"me.{c}").alias(c) for c in extra_cols],
+            )
         )
-    )
-    return _semantic_flags_tail(assign, flags)
-
-
-def _semantic_flags_tail(assign: DataFrame, flags: DataFrame) -> DataFrame:
-    """Join per-vector verdicts back onto the full assignment: members
-    of over-cap (skipped) clusters get n=0 / keep=true / max_cos null —
-    identical for both kernels."""
-    return assign.join(flags, "vec_id", "left").select(
+    in_cap = flags.select(
         "vec_id",
         "cent_id",
         F.coalesce("n_dup_neighbors", F.lit(0)).alias("n_dup_neighbors"),
         "max_cos",
         (~F.coalesce(F.col("dominated"), F.lit(False))).alias("keep"),
+        *extra_cols,
     )
+    return in_cap.unionByName(over)
 
 
 # GEMM row-block size of _cos_blocks: bounds the live cos/dominance
@@ -2854,10 +2886,12 @@ def _cos_blocks(A, B, where: str):
         )
 
 
-def _member_flags_arrow(small: DataFrame) -> DataFrame:
+def _member_flags_arrow(small: DataFrame, extra: list[str]) -> DataFrame:
     """Per-vector SemDeDup verdict via one GEMM per cluster.
 
-    ``small``: (cent_id, vec_id, d2, v) restricted to in-cap clusters.
+    ``small``: (cent_id, vec_id, d2, v, *extra) restricted to in-cap
+    clusters; the ``extra`` per-vector columns pass through the kernel
+    unchanged.
     Each cluster reaches the kernel whole, one grouped_map_in_arrow call
     per cluster — its member list exists ONCE per task instead of riding a
     collect_list join onto every member row (the fold form's O(n_c^2*dim)
@@ -2900,25 +2934,29 @@ def _member_flags_arrow(small: DataFrame) -> DataFrame:
         yield pa.RecordBatch.from_arrays(
             [
                 pa.array(ids, type=pa.int64()),
+                tbl.column("cent_id").combine_chunks(),
                 pa.array(np.concatenate(o_n), type=pa.int64()),
                 # NaN marks "no dup neighbors" -> null (from_pandas=True)
                 pa.array(
                     np.concatenate(o_mx), type=pa.float64(), from_pandas=True
                 ),
                 pa.array(np.concatenate(o_dom), type=pa.bool_()),
+                *[tbl.column(c).combine_chunks() for c in extra],
             ],
-            names=["vec_id", "n_dup_neighbors", "max_cos", "dominated"],
+            names=["vec_id", "cent_id", "n_dup_neighbors", "max_cos", "dominated"]
+            + extra,
         )
 
     from .operators.grouped import grouped_map_in_arrow
 
     return grouped_map_in_arrow(
-        small.select("cent_id", "vec_id", "d2", "v"),
+        small.select("cent_id", "vec_id", "d2", "v", *extra),
         "cent_id",
         [],
         _cluster,
-        "vec_id bigint, n_dup_neighbors bigint, max_cos double, "
-        "dominated boolean",
+        "vec_id bigint, cent_id bigint, n_dup_neighbors bigint, "
+        "max_cos double, dominated boolean"
+        + "".join(f", {c} {small.schema[c].dataType.simpleString()}" for c in extra),
     )
 
 
@@ -3070,31 +3108,6 @@ GROUP BY cent_id
 _PROTO_ALPHA = 0.95
 
 
-def _proto_flags(assign: DataFrame) -> DataFrame:
-    """(vec_id, cent_id, d2, mean_d2, keep_proto) from a 1-NN assignment.
-
-    The per-cluster mean uses the kmeans discipline: DECIMAL(25,9) sum of
-    round(d2, 9) cast to double, divided, rounded to 6 dp — float
-    aggregation order would differ between engines; this is bit-identical
-    both sides. d2 itself is the same in-row fold q_kmeans_train ranks
-    by, so the keep comparison is engine-deterministic."""
-    dec = lambda c: F.round(c.cast("double"), 9).cast("decimal(25,9)")  # noqa: E731
-    mean = assign.groupBy("cent_id").agg(
-        F.round(
-            F.sum(dec(F.col("d2"))).cast("double") / F.count("*"), 6
-        ).alias("mean_d2")
-    )
-    return assign.join(F.broadcast(mean), "cent_id").select(
-        "vec_id",
-        "cent_id",
-        "d2",
-        "mean_d2",
-        (F.col("d2") > F.lit(_PROTO_ALPHA) * F.col("mean_d2")).alias(
-            "keep_proto"
-        ),
-    )
-
-
 def q_cluster_prototypes(
     spark: SparkSession,
     sf_dir: str,
@@ -3105,16 +3118,19 @@ def q_cluster_prototypes(
     the prototypical core). One broadcast join of the k-row mean table —
     no window, no quadratic. ``centroids=`` shares a held trainer."""
     e, cent = _vectors_and_centroids(spark, sf_dir, centroids)
-    # _barrier: _proto_flags references the assignment twice (mean + join)
+    # _barrier: the assignment is read twice (the mean + the join).
+    # d2 itself is the same in-row fold q_kmeans_train ranks by, so the
+    # keep comparison is engine-deterministic.
     assign = _barrier(
         _assign_to(e, cent, 1).select("vec_id", "cent_id", "d2")
     )
-    return _proto_flags(assign).select(
+    stats = _cluster_stats(assign).select("cent_id", "mean_d2")
+    return assign.join(F.broadcast(stats), "cent_id").select(
         "vec_id",
         "cent_id",
         F.round(F.col("d2").cast("double"), 4).alias("d2"),
         "mean_d2",
-        "keep_proto",
+        _keep_proto(),
     )
 
 
@@ -3132,23 +3148,18 @@ def q_semantic_prep(
     ``backend="arrow"`` routes trainer, assignment, and the member
     cosine through the GEMM kernels (production path)."""
     e, cent = _vectors_and_centroids(spark, sf_dir, centroids, backend)
-    # _barrier: the flags chain references the assignment 3x and
-    # _proto_flags 2x more — 5 re-executions of the fold without it
-    assign = _barrier(
-        _assign_to(e, cent, 1, backend=backend).select(
-            "vec_id", "cent_id", "d2"
-        )
-    )
-    sem = _semantic_flags_from(assign, e, backend=backend).select(
-        "vec_id", "cent_id", F.col("keep").alias("keep_dedup")
-    )
-    proto = _proto_flags(assign).select("vec_id", "keep_proto")
-    return sem.join(proto, "vec_id").select(
+    # _barrier: the verdict chain reads the assignment 3x (the cluster
+    # stats, the in-cap and the over-cap rows) — 3 re-executions of the
+    # fold without it
+    assign = _barrier(_assign_to(e, cent, 1, backend=backend, carry_v=True))
+    return _semantic_flags_from(
+        assign, backend=backend, keep_proto=True
+    ).select(
         "vec_id",
         "cent_id",
-        "keep_dedup",
+        F.col("keep").alias("keep_dedup"),
         "keep_proto",
-        (F.col("keep_dedup") & F.col("keep_proto")).alias("keep"),
+        (F.col("keep") & F.col("keep_proto")).alias("keep"),
     )
 
 
@@ -3281,11 +3292,7 @@ def semantic_incremental_verdicts(
     # kernel 2x (measured 7.94 s -> 2.80 s per arrival at sf0.1,
     # verdicts identical). A production arrival job materializes the
     # batch's assignment and verdicts anyway — they land in the store.
-    n_assign = (
-        _assign_to(new, cent, 1, backend=backend)
-        .select("vec_id", "cent_id", "d2")
-        .transform(_barrier)
-    )
+    n_assign = _barrier(_assign_to(new, cent, 1, backend=backend, carry_v=True))
     ksize = stored_kept.groupBy("cent_id").agg(F.count("*").alias("kn"))
     small_k = stored_kept.join(
         F.broadcast(
@@ -3295,13 +3302,11 @@ def semantic_incremental_verdicts(
     )
     if backend == "arrow":
         cmp = _store_compare_arrow(
-            n_assign.select("vec_id", "cent_id").join(new, "vec_id"), small_k
+            n_assign.select("vec_id", "cent_id", "v"), small_k
         ).transform(_barrier)
     else:
-        nv = (
-            n_assign.select("vec_id", "cent_id")
-            .join(new, "vec_id")
-            .withColumn("n2", _n2_double(F.col("v")))
+        nv = n_assign.select("vec_id", "cent_id", "v").withColumn(
+            "n2", F.expr(_N2_FOLD)
         )
         # store compare as ONE in-row pass per new vector over its
         # cluster's collected kept list (same round-6 shape as
@@ -3352,7 +3357,7 @@ def semantic_incremental_verdicts(
             .transform(_barrier)
         )
     surv = n_assign.join(cmp, "vec_id", "left_anti")
-    b_flags = _semantic_flags_from(surv, new, backend=backend).select(
+    b_flags = _semantic_flags_from(surv, backend=backend).select(
         "vec_id", F.col("keep").alias("batch_keep")
     )
     return (
@@ -3393,13 +3398,9 @@ def q_semantic_dedup_incremental(
         _, cent = _trained_centroids(spark, sf_dir, e=store, backend=backend)
     else:
         cent = centroids
-    s_assign = _barrier(
-        _assign_to(store, cent, 1, backend=backend).select(
-            "vec_id", "cent_id", "d2"
-        )
-    )
+    s_assign = _barrier(_assign_to(store, cent, 1, backend=backend, carry_v=True))
     s_keep = (
-        _semantic_flags_from(s_assign, store, backend=backend)
+        _semantic_flags_from(s_assign, backend=backend)
         .where(F.col("keep"))
         .select("vec_id")
     )
@@ -3412,11 +3413,8 @@ def q_semantic_dedup_incremental(
     # this in-plan derivation exists so the DuckDB oracle can recompute
     # it, and the barrier makes the plan pay for it once, like the
     # table it stands in for.
-    stored_kept = (
-        s_assign.select("vec_id", "cent_id")
-        .join(s_keep, "vec_id")
-        .join(store, "vec_id")
-        .transform(_barrier)
+    stored_kept = _barrier(
+        s_assign.select("vec_id", "cent_id", "v").join(s_keep, "vec_id")
     )
     return semantic_incremental_verdicts(new, stored_kept, cent, backend)
 

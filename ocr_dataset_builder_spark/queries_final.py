@@ -69,9 +69,7 @@ from .queries_corpus import (
     _SEM_PROTO_CTES,
     _SHINGLE_CTE,
     _barrier,
-    _docs,
     _hex15,
-    _shingles,
     q_quality_score,
     q_semantic_prep,
 )
@@ -81,7 +79,7 @@ from .queries_quality import (
     _PROBE_MOD,
     _SHUF_SEED,
     _TBS_FRAC,
-    _q_decontaminate_from,
+    _decontaminated,
     budget_fill,
 )
 from .queries_substr import (
@@ -114,10 +112,7 @@ def _final_survivors(
     persists to a table anyway (the survivor set IS the cleaned-corpus
     ship artifact); the checkpoint is the in-session stand-in. Same
     precedent as the k-means trainer's per-iteration barrier."""
-    d = _docs(spark, sf_dir).where(F.col("doc_id") % _PROBE_MOD != 0)
-    sh = _shingles(spark, sf_dir)
-    hits = _q_decontaminate_from(spark, sf_dir, sh).where(F.col("contaminated"))
-    clean = d.join(hits.select("doc_id"), "doc_id", "left_anti")
+    clean = _decontaminated(spark, sf_dir)
     fp = clean.select(
         F.md5(_NORM_SPARK(F.col("text"))).alias("fp"),
         "doc_id",
@@ -191,7 +186,12 @@ def q_corpus_prep_final(
     # ---- stage 6: mixture-epochs plan over the KEPT corpus ------------
     # integer `div` end to end (tt*weight_bp passes 2^53 at the
     # 10^12-token scale this targets) — same derivation as
-    # q_mixture_epochs, sized on surviving tokens
+    # q_mixture_epochs, sized on surviving tokens. The corpus totals are
+    # a window over the O(sources) relation, and the plan is read by ONE
+    # projection: each doc explodes its whole epoch list (the full
+    # epochs, then the residual one when its hash falls under
+    # residual_ppm), so the plan relation is derived once and both
+    # readers of the stream share it.
     per_src = (
         kept.groupBy("source")
         .agg(F.sum("n_tok").cast("bigint").alias("avail_tok"))
@@ -199,10 +199,14 @@ def q_corpus_prep_final(
             "weight_bp", (_hex15(F.col("source")) % 9000 + 1000).cast("bigint")
         )
     )
-    totals = per_src.agg(
-        F.sum("avail_tok").alias("_tt"), F.sum("weight_bp").alias("_tw")
+    every = Window.partitionBy()
+    j = per_src.select(
+        "source",
+        "avail_tok",
+        "weight_bp",
+        F.sum("avail_tok").over(every).alias("_tt"),
+        F.sum("weight_bp").over(every).alias("_tw"),
     )
-    j = per_src.crossJoin(F.broadcast(totals))
     j = j.withColumn("target_tok", F.expr("_tt * weight_bp div _tw"))
     full = F.least(
         F.expr("target_tok div avail_tok"),
@@ -218,22 +222,21 @@ def q_corpus_prep_final(
         .cast("bigint")
     )
     plan = j.select("source", "full_epochs", residual.alias("residual_ppm"))
-    ke = kept.join(F.broadcast(plan), "source")
-    fulls = ke.select(
-        "doc_id",
-        "source",
-        "n_tok",
-        F.explode(
-            F.when(
-                F.col("full_epochs") > 0,
-                F.sequence(F.lit(0).cast("bigint"), F.col("full_epochs") - 1),
-            ).otherwise(F.array().cast("array<bigint>"))
-        ).alias("epoch"),
+    no_epochs = F.array().cast("array<bigint>")
+    epochs = F.concat(
+        F.when(
+            F.col("full_epochs") > 0,
+            F.sequence(F.lit(0).cast("bigint"), F.col("full_epochs") - 1),
+        ).otherwise(no_epochs),
+        F.when(
+            _hex15(F.col("doc_id").cast("string")) % 1000000
+            < F.col("residual_ppm"),
+            F.array("full_epochs"),
+        ).otherwise(no_epochs),
     )
-    resid = ke.where(
-        _hex15(F.col("doc_id").cast("string")) % 1000000 < F.col("residual_ppm")
-    ).select("doc_id", "source", "n_tok", F.col("full_epochs").alias("epoch"))
-    stream = fulls.unionByName(resid)
+    stream = kept.join(F.broadcast(plan), "source").select(
+        "doc_id", "source", "n_tok", F.explode(epochs).alias("epoch")
+    )
     # ---- stage 6b/7: deterministic order + offsets (two-phase) --------
     key = F.md5(
         F.concat(

@@ -19,6 +19,7 @@ from .operators.boilerplate import (
     strip_html_col,
 )
 from .operators.layout import reading_order_lines, synth_layout_tokens
+from .synth import load_flat_documents
 
 # ---------------------------------------------------------------------------
 # deterministic HTML derivation (portable)
@@ -44,7 +45,7 @@ def _html_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # scale — same rationale as _norm_docs; skipped on parallel scans
     from .queries_corpus import _spread
 
-    d = _spread(spark.read.parquet(f"{sf_dir}/documents.parquet"), "doc_id")
+    d = _spread(load_flat_documents(spark, sf_dir), "doc_id")
     html = F.concat(
         F.lit("<html><head><title>Doc "),
         F.col("doc_id").cast("string"),
@@ -111,13 +112,12 @@ _PHRASE_FRAC = 0.15
 def _doc_phrases(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .queries_corpus import word_ngrams
 
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
     norm = F.trim(F.regexp_replace(F.lower("text"), r"\s+", " "))
-    grams = word_ngrams(F.split(norm, " "), 2)
+    d = load_flat_documents(spark, sf_dir).withColumn("t", F.split(norm, " "))
     return d.select(
         F.col("doc_id").cast("string").alias("doc_id"),
         "source",
-        F.explode(grams).alias("phrase"),
+        F.explode(word_ngrams("t", 2)).alias("phrase"),
     )
 
 
@@ -147,7 +147,7 @@ def q_boilerplate_phrases(spark: SparkSession, sf_dir: str) -> DataFrame:
     # source sizes come from the base table — no second pass over the
     # exploded phrase relation
     sizes = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        load_flat_documents(spark, sf_dir)
         .groupBy("source")
         .agg(F.count("*").alias("n_src_docs"))
     )
@@ -213,7 +213,7 @@ GROUP BY p.doc_id
 
 
 def q_layout_reading_order(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    d = load_flat_documents(spark, sf_dir)
     return reading_order_lines(synth_layout_tokens(d))
 
 

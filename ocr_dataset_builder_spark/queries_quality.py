@@ -49,24 +49,12 @@ from .queries_corpus import (
     _hex15,
     _norm_docs,
     _shingles,
+    positional_ngrams,
 )
 
 # ---------------------------------------------------------------------------
 # quality_repetition — Gopher-style repetition signals
 # ---------------------------------------------------------------------------
-
-
-def _grams_all(t: F.Column, n: int) -> F.Column:
-    """ALL word n-grams (with multiplicity — unlike word_ngrams, which
-    dedups for shingling). zip_with over shifted slices: each slice
-    evaluates once per row."""
-    ln = F.greatest(F.size(t) - (n - 1), F.lit(0))
-    grams = F.slice(t, 1, ln)
-    for k in range(1, n):
-        grams = F.zip_with(
-            grams, F.slice(t, k + 1, ln), lambda a, b: F.concat(a, F.lit(" "), b)
-        )
-    return grams
 
 
 def _run_fold(sorted_grams: F.Column):
@@ -100,8 +88,8 @@ def q_quality_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     Zero shuffles — the whole operator rides the document scan."""
     nd = _norm_docs(spark, sf_dir).withColumn("t", F.split("norm", " "))
     d = (
-        nd.withColumn("s2", F.array_sort(_grams_all(F.col("t"), 2)))
-        .withColumn("s5", F.array_sort(_grams_all(F.col("t"), 5)))
+        nd.withColumn("s2", F.array_sort(positional_ngrams("t", 2)))
+        .withColumn("s5", F.array_sort(positional_ngrams("t", 5)))
         .withColumn("acc", _run_fold(F.col("s2")))
     )
     m = F.size("s5")
@@ -323,9 +311,9 @@ def q_decontaminate_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _q_decontaminate_from(
-    spark: SparkSession, sf_dir: str, sh: DataFrame, use_broadcast: bool = True
-) -> DataFrame:
+def _probe_hits(sh: DataFrame, use_broadcast: bool = True) -> DataFrame:
+    """(doc_id, n_hits) of every non-probe doc sharing at least one
+    shingle with the probe docs."""
     probe = (
         sh.where(F.col("doc_id") % _PROBE_MOD == 0)
         .select("shingle")
@@ -334,11 +322,28 @@ def _q_decontaminate_from(
     if use_broadcast:
         probe = F.broadcast(probe)
     corpus_sh = sh.where(F.col("doc_id") % _PROBE_MOD != 0)
-    hits = (
+    return (
         corpus_sh.join(probe, "shingle")
         .groupBy("doc_id")
         .agg(F.count("*").alias("n_hits"))
     )
+
+
+def _decontaminated(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The documents a composed pipeline keeps after decontamination:
+    not a probe doc, and no shingle shared with the probe set. Anti-joins
+    the hit doc ids directly — the per-doc flag relation of
+    q_decontaminate would first join every doc back in, a broadcast job
+    that changes no row."""
+    d = _docs(spark, sf_dir).where(F.col("doc_id") % _PROBE_MOD != 0)
+    hits = _probe_hits(_shingles(spark, sf_dir)).select("doc_id")
+    return d.join(hits, "doc_id", "left_anti")
+
+
+def _q_decontaminate_from(
+    spark: SparkSession, sf_dir: str, sh: DataFrame, use_broadcast: bool = True
+) -> DataFrame:
+    hits = _probe_hits(sh, use_broadcast)
     base = (
         _docs(spark, sf_dir)
         .where(F.col("doc_id") % _PROBE_MOD != 0)
@@ -679,8 +684,8 @@ def q_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.length(F.regexp_replace("norm", "[^a-z]", "")) / nospace, 6
     )
     d = (
-        nd.withColumn("s2", F.array_sort(_grams_all(F.col("t"), 2)))
-        .withColumn("s5", F.array_sort(_grams_all(F.col("t"), 5)))
+        nd.withColumn("s2", F.array_sort(positional_ngrams("t", 2)))
+        .withColumn("s5", F.array_sort(positional_ngrams("t", 5)))
         .withColumn("acc", _run_fold(F.col("s2")))
     )
     m = F.size("s5")
@@ -798,10 +803,7 @@ def q_corpus_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
     twin of ``dataset_sample``."""
     from .queries_corpus import _NORM_SPARK
 
-    d = _docs(spark, sf_dir).where(F.col("doc_id") % _PROBE_MOD != 0)
-    sh = _shingles(spark, sf_dir)
-    hits = _q_decontaminate_from(spark, sf_dir, sh).where(F.col("contaminated"))
-    clean = d.join(hits.select("doc_id"), "doc_id", "left_anti")
+    clean = _decontaminated(spark, sf_dir)
     sampled = clean.where(
         _hex15(F.col("doc_id").cast("string")) % 10000
         < _RATE_BP_SPARK(F.col("source"))
@@ -1202,8 +1204,8 @@ def q_token_budget_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.col("n_tokens").cast("bigint").alias("n_tokens"), "quality"
     )
     src = _docs(spark, sf_dir).select("doc_id", "source")
-    # _barrier (r8): budget_fill references this narrow scored relation
-    # in four branches; without it each branch re-ran the quality
+    # _barrier (r8): budget_fill reads this narrow scored relation three
+    # times (four in r8); without it each read re-ran the quality
     # signals (and, with the r8 _spread under quality_score, each
     # branch carried its own repartition exchange — measured +89% on
     # this key before the barrier)
@@ -1216,34 +1218,45 @@ def budget_fill(d: DataFrame) -> DataFrame:
     (``corpus_prep_budget``) run it over THEIR survivor relation.
     Input: (doc_id, source, n_tokens, quality) with quality non-null;
     output: the kept rows, same columns. See
-    :func:`q_token_budget_sample` for the three-stage scale argument."""
-    budgets = d.groupBy("source").agg(
-        F.floor(F.sum("n_tokens") * _TBS_FRAC).alias("budget")
-    )
-    # stage 1: exact-quality groups (<= 1e6+1 per source by construction)
+    :func:`q_token_budget_sample` for the three-stage scale argument.
+
+    ``d`` is read by the one group aggregate and by one broadcast join
+    against a per-source table, so a caller's scoring plan under ``d``
+    is planned once (every read prunes it to the same columns)."""
+    # stage 1: exact-quality groups (<= 1e6+1 per source by construction);
+    # the source budget and the tokens of every higher-quality group are
+    # windows over the group relation — one exchange on source for both
+    # (the group token sums add up to the source's total exactly)
     g = d.groupBy("source", "quality").agg(F.sum("n_tokens").alias("g_tok"))
-    w_hi = (
-        Window.partitionBy("source")
-        .orderBy(F.col("quality").desc())
-        .rowsBetween(Window.unboundedPreceding, -1)
+    by_src = Window.partitionBy("source")
+    w_hi = by_src.orderBy(F.col("quality").desc()).rowsBetween(
+        Window.unboundedPreceding, -1
     )
-    g2 = (
-        g.withColumn("cum_hi", F.coalesce(F.sum("g_tok").over(w_hi), F.lit(0)))
-        .join(F.broadcast(budgets), "source")
+    g2 = g.select(
+        "source",
+        "quality",
+        "g_tok",
+        F.coalesce(F.sum("g_tok").over(w_hi), F.lit(0)).alias("cum_hi"),
+        F.floor(F.sum("g_tok").over(by_src) * _TBS_FRAC).alias("budget"),
     )
-    # stage 2: whole-group classification
-    full = g2.where(F.col("cum_hi") + F.col("g_tok") <= F.col("budget")).select(
-        "source", "quality"
+    # stage 2: whole-group classification, one row per source. The whole
+    # groups (cum_hi + g_tok <= budget) are a prefix of the quality-desc
+    # order (cum_hi + g_tok rises strictly along it), so a doc's group is
+    # whole iff its quality >= the least whole quality; at most one
+    # cutoff group straddles the budget.
+    whole = F.col("cum_hi") + F.col("g_tok") <= F.col("budget")
+    cut = (F.col("cum_hi") < F.col("budget")) & ~whole
+    cls = g2.groupBy("source").agg(
+        F.min(F.when(whole, F.col("quality"))).alias("_q_whole"),
+        F.max(F.when(cut, F.col("quality"))).alias("_q_cut"),
+        F.max(F.when(cut, F.col("budget") - F.col("cum_hi"))).alias("_rem"),
     )
-    cut = g2.where(
-        (F.col("cum_hi") < F.col("budget"))
-        & (F.col("cum_hi") + F.col("g_tok") > F.col("budget"))
-    ).select("source", "quality", (F.col("budget") - F.col("cum_hi")).alias("_rem"))
-    kept_full = d.join(full, ["source", "quality"], "leftsemi")
+    dc = d.join(F.broadcast(cls), "source")
+    kept_full = dc.where(F.col("quality") >= F.col("_q_whole"))
     # stage 3: the (<= one per source) cutoff group, resolved in doc_id
     # order via the SHARED pack_offsets two-phase prefix (partitioned
     # per (source, quality)); start_off IS the within-group cum-before
-    cd = d.join(F.broadcast(cut), ["source", "quality"])
+    cd = dc.where(F.col("quality") == F.col("_q_cut"))
     cut_kept = (
         pack_offsets(
             cd.withColumnRenamed("n_tokens", "n_tok"),
@@ -1809,7 +1822,7 @@ def q_corpus_prep_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     proofs.
 
     Fan-out note (measured, sf0.1 local[32]): :func:`budget_fill`
-    references the canonical-survivor relation in four branches, and
+    referenced the canonical-survivor relation in four branches, and
     the printed plan shows the decontaminate -> dedup chain repeated
     per branch — but at runtime Spark's exchange reuse
     (``spark.sql.exchange.reuse``, on by default) materializes each
@@ -1821,10 +1834,7 @@ def q_corpus_prep_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedupe (best-of-4: 5.4 s pure vs 7.1 s persisted)."""
     from .queries_corpus import _NORM_SPARK, q_quality_score
 
-    d = _docs(spark, sf_dir).where(F.col("doc_id") % _PROBE_MOD != 0)
-    sh = _shingles(spark, sf_dir)
-    hits = _q_decontaminate_from(spark, sf_dir, sh).where(F.col("contaminated"))
-    clean = d.join(hits.select("doc_id"), "doc_id", "left_anti")
+    clean = _decontaminated(spark, sf_dir)
     qsc = q_quality_score(spark, sf_dir).select(
         "doc_id", F.col("n_tokens").cast("bigint").alias("n_tokens"), "quality"
     )
@@ -1840,8 +1850,8 @@ def q_corpus_prep_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     # never reaches the nullable quality field
     from .queries_corpus import _barrier
 
-    # _barrier (r8): budget_fill references the canonical relation in
-    # four branches; this one is NARROW (4 scalar columns) so the
+    # _barrier (r8): budget_fill reads the canonical relation three
+    # times; this one is NARROW (4 scalar columns) so the
     # materialization is cheap — unlike the r6-rejected persist of the
     # WIDE survivor relation (docstring above), which serialized text
     canon = _barrier(

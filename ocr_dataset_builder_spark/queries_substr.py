@@ -74,7 +74,7 @@ def _windows(
     nd = nd.withColumn("t", F.split("norm", " "))
     grams = nd.select(
         "doc_id",
-        F.posexplode(positional_ngrams(F.col("t"), w)).alias("start0", "gram"),
+        F.posexplode(positional_ngrams("t", w)).alias("start0", "gram"),
     )
     if fingerprint == "xxhash64":
         fp = F.xxhash64("gram")
@@ -470,28 +470,16 @@ def _apply_removals(nd: DataFrame, rspans: DataFrame) -> DataFrame:
     # 0-based position, kept tokens so far); each interval contributes
     # the gap run before it, the finisher flushes the tail after the
     # last interval. A doc with no spans (sp NULL) keeps everything.
-    spans_col = F.coalesce(
-        "sp", F.expr("CAST(array() AS array<struct<span_start:int,span_end:int>>)")
-    )
-    kept = F.aggregate(
-        spans_col,
-        F.struct(
-            F.lit(0).alias("prev"),
-            F.expr("CAST(array() AS array<string>)").alias("acc"),
-        ),
-        lambda st, s: F.struct(
-            (s["span_end"] + 1).alias("prev"),
-            F.concat(
-                st["acc"],
-                F.slice(
-                    F.col("t"), st["prev"] + 1, s["span_start"] - st["prev"]
-                ),
-            ).alias("acc"),
-        ),
-        lambda st: F.concat(
-            st["acc"],
-            F.slice(F.col("t"), st["prev"] + 1, F.size("t") - st["prev"]),
-        ),
+    # SQL text: the same fold without PySpark's per-lambda JVM round
+    # trips on the driver
+    kept = F.expr(
+        """aggregate(
+          coalesce(sp, CAST(array() AS array<struct<span_start:int,span_end:int>>)),
+          struct(0 AS prev, CAST(array() AS array<string>) AS acc),
+          (st, s) -> struct(
+            s.span_end + 1 AS prev,
+            concat(st.acc, slice(t, st.prev + 1, s.span_start - st.prev)) AS acc),
+          st -> concat(st.acc, slice(t, st.prev + 1, size(t) - st.prev)))"""
     )
     return joined.select(
         "doc_id",
@@ -578,19 +566,14 @@ def q_corpus_prep_substr(
     raw-text n_tok — the two are separate deliverables by design.
     Scale: adds exactly the substr_removal_spans stages (linear shuffles
     on fingerprint and doc_id) to the corpus_prep plan."""
-    from .queries_corpus import _NORM_SPARK, _docs, _hex15 as _h15
+    from .queries_corpus import _NORM_SPARK, _hex15 as _h15
     from .queries_quality import (
-        _PROBE_MOD,
         _RATE_BP_SPARK,
-        _q_decontaminate_from,
+        _decontaminated,
         pack_offsets,
     )
-    from .queries_corpus import _shingles
 
-    d = _docs(spark, sf_dir).where(F.col("doc_id") % _PROBE_MOD != 0)
-    sh = _shingles(spark, sf_dir)
-    hits = _q_decontaminate_from(spark, sf_dir, sh).where(F.col("contaminated"))
-    clean = d.join(hits.select("doc_id"), "doc_id", "left_anti")
+    clean = _decontaminated(spark, sf_dir)
     sampled = clean.where(
         _h15(F.col("doc_id").cast("string")) % 10000
         < _RATE_BP_SPARK(F.col("source"))

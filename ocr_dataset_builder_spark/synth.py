@@ -89,8 +89,21 @@ def duckdb_ocr_sql(doc_id_expr: str, media_ref_expr: str, off_expr: str) -> str:
 # ---------------------------------------------------------------------------
 
 
+# The flat corpus tables, read with their declared schemas: a read
+# without one runs Spark jobs to list and sample the files before it
+# returns (one per read, on every call of every corpus query).
+# tests/test_synth_parity.py pins both equal to what Spark infers from
+# the fixture files, so generator drift fails loudly.
+DOCUMENTS_SCHEMA = "doc_id bigint, text string, lang string, source string, n_chars bigint"
+EMBEDDINGS_SCHEMA = "vec_id bigint, embedding array<float>, label int"
+
+
 def load_flat_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
+    return spark.read.schema(DOCUMENTS_SCHEMA).parquet(f"{sf_dir}/documents.parquet")
+
+
+def load_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return spark.read.schema(EMBEDDINGS_SCHEMA).parquet(f"{sf_dir}/embeddings.parquet")
 
 
 def span_rows(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -257,3 +257,34 @@ def test_final_centroids_knob_matches_pure(spark, sf_dir, final_rows):
         assert sorted(held) == sorted(final_rows)
     finally:
         cent.unpersist()
+
+
+# Spark jobs of one q_corpus_prep_final call plus the noop write that
+# forces it, on the test fixture (54 on the benchmark's corpus_prep
+# inputs); scripts/job_census.py breaks the count down per barrier. A
+# ceiling, not an equality: AQE can vary the count by one job between
+# inputs.
+_JOB_BUDGET = 55
+
+
+def test_corpus_prep_job_budget(spark, sf_dir):
+    """Per-call job count of the composed deliverable, which on a small
+    cluster is bound by per-job latency (every AQE query stage and every
+    broadcast is a job). Counted the way the benchmark's same-work guard
+    counts: under the call's own job group, after the listener bus has
+    drained. A warm call: the first one also compiles and starts the
+    Python workers."""
+    sc = spark.sparkContext
+    q_corpus_prep_final(spark, sf_dir).write.format("noop").mode("overwrite").save()
+    spark.catalog.clearCache()
+    group = "corpus-prep-job-budget"
+    sc.setJobGroup(group, "job budget")
+    try:
+        q_corpus_prep_final(spark, sf_dir).write.format("noop").mode(
+            "overwrite"
+        ).save()
+    finally:
+        sc.setJobGroup("idle", "after the job budget")
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert 0 < jobs <= _JOB_BUDGET, jobs

@@ -17,17 +17,13 @@ def _inertia(e, cent):
 
 
 def test_inertia_non_increasing_over_iterations(spark, sf_dir):
-    e = qc._emb(spark, sf_dir).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
-    seeds = e.where(F.col("vec_id") % qc._IVF_CENTROID_MOD == 0).select(
-        F.col("vec_id").alias("cent_id"), F.col("v").alias("cv")
-    )
+    e = qc._vectors(spark, sf_dir)
+    seeds = qc._seed_centroids(e)
     inertias = [_inertia(e, seeds)]
     cent = seeds
     for _ in range(3):
-        assign = qc._assign_to(e, cent, 1).select("vec_id", "cent_id")
-        cent = qc._centroid_means(assign, e).localCheckpoint()
+        assign = qc._assign_to(e, cent, 1, carry_v=True).select("cent_id", "v")
+        cent = qc._centroid_means(assign).localCheckpoint()
         inertias.append(_inertia(e, cent))
     # Lloyd's algorithm is monotone up to the 6-dp centroid rounding;
     # allow that rounding's worth of slack per step
@@ -48,9 +44,7 @@ def test_converged_trainer_stops_and_matches_fixed_path(spark, sf_dir):
     # if it converged within the fixed count, the fixed-count query's
     # final assignment equals the converged assignment
     if n_iters <= qc._KM_ITERS:
-        e = qc._emb(spark, sf_dir).select(
-            "vec_id", F.col("embedding").cast("array<double>").alias("v")
-        )
+        e = qc._vectors(spark, sf_dir)
         fixed = {
             (r["vec_id"], r["cent_id"])
             for r in qc.q_kmeans_train(spark, sf_dir).collect()

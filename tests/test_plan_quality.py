@@ -445,3 +445,45 @@ def test_token_budget_sample_windows_are_bounded(spark, sf_dir):
                 ln,
             ), ln
     assert doc_windows >= 1, plan  # the gate must not be vacuous
+
+
+def _barrier_and_final_plans(spark, monkeypatch, build) -> list[str]:
+    """Executed plans of every barrier ``build`` materializes, plus the
+    plan it returns: an iterative query runs most of its jobs inside
+    its barriers, where the returned plan cannot show them."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    plans: list[str] = []
+    for name in ("localCheckpoint", "checkpoint"):
+        orig = getattr(DataFrame, name)
+
+        def materialize(self, *a, _orig=orig, **kw):
+            out = _orig(self, *a, **kw)
+            plans.append(_executed_plan(self))
+            return out
+
+        monkeypatch.setattr(DataFrame, name, materialize)
+    df = build()
+    monkeypatch.undo()
+    df.write.format("noop").mode("overwrite").save()
+    return plans + [_executed_plan(df)]
+
+
+@pytest.mark.parametrize("query", ["kmeans_train", "semantic_dedup_incremental"])
+def test_kmeans_plans_have_no_runtime_bloom_filter(spark, sf_dir, monkeypatch, query):
+    """A Lloyd step reads the vectors once: the assignment carries each
+    vector to the means. A join back to the vectors (or to a filtered
+    subset of them) makes Spark inject a runtime bloom filter — a
+    two-job bloom_filter_agg subquery per iteration, and a 1 MiB filter
+    inlined into every task binary of the probing stage."""
+    from ocr_dataset_builder_spark import queries_corpus as qc
+
+    build = {
+        "kmeans_train": qc.q_kmeans_train,
+        "semantic_dedup_incremental": qc.q_semantic_dedup_incremental,
+    }[query]
+    plans = _barrier_and_final_plans(spark, monkeypatch, lambda: build(spark, sf_dir))
+    assert len(plans) > qc._KM_ITERS  # the trainer's barriers were seen
+    for plan in plans:
+        assert "bloom_filter_agg" not in plan, plan
+        assert "might_contain" not in plan, plan

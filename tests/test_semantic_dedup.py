@@ -68,6 +68,16 @@ def test_cluster_cap_disables_quadratic_step(spark, sf_dir, monkeypatch):
     rows = _flags(spark, sf_dir)
     assert rows
     assert all(r["keep"] and r["n_dup_neighbors"] == 0 for r in rows)
+    # over-cap members still carry the prototype verdict in the composed
+    # form (computed per row from the same per-cluster aggregate)
+    proto = {
+        r["vec_id"]: r["keep_proto"]
+        for r in qc.q_cluster_prototypes(spark, sf_dir).collect()
+    }
+    prep = qc.q_semantic_prep(spark, sf_dir).collect()
+    assert {r["vec_id"] for r in prep} == set(proto)
+    for r in prep:
+        assert r["keep_dedup"] and r["keep_proto"] == proto[r["vec_id"]], r
 
 
 def test_stats_consistent_with_flags(spark, sf_dir):

@@ -86,3 +86,16 @@ def test_documents_doc_id_unique(spark, sf_dir):
     countDistinct(doc_id)."""
     d = spark.read.parquet(f"{sf_dir}/documents.parquet")
     assert d.count() == d.select("doc_id").distinct().count()
+
+
+def test_declared_schemas_match_inferred(spark, sf_dir):
+    """The corpus readers declare their schemas instead of inferring them
+    (a read without one runs Spark jobs before it returns). They must
+    equal what Spark infers from the fixture files, so a drift in the
+    table generator fails here instead of silently re-typing a column."""
+    for name, load in (
+        ("documents", synth.load_flat_documents),
+        ("embeddings", synth.load_embeddings),
+    ):
+        inferred = spark.read.parquet(f"{sf_dir}/{name}.parquet").schema
+        assert load(spark, sf_dir).schema == inferred, name
