@@ -5,11 +5,15 @@ Replaces the reference's append-only text checkpoint logs
 
 * ``checkpoint`` — one row per completed doc (doc_id, run_id, status,
   committed_at). Resume = ``left_anti`` join of inputs against
-  status='done' (J5, reference frame_pipeline.py:241-247); stale-entry
-  pruning = ``left_semi`` against current inputs (J6, :226-238).
+  status='done' (J5, reference frame_pipeline.py:241-247). Stale-entry
+  pruning (J6, :226-238) is the registered query
+  ``queries_joins.q_checkpoint_semi``.
 * ``lineage`` — per-partition metrics rows (partition_id, doc_id range,
   docs, frames_processed, ocr_chars, dedup_ratio, status, committed_at)
   per the north rule.
+
+A run-partitioned output (``<table>/run_id=<id>/``) is shown to readers
+through :func:`read_committed`: only runs that reached the checkpoint.
 
 Storage goes through a pluggable table store (``sources/tables.py``):
 the default is a directory of parquet appends; passing
@@ -31,6 +35,8 @@ LINEAGE_SCHEMA = (
     "docs bigint, frames_processed bigint, ocr_chars bigint, dedup_ratio double, "
     "status string, committed_at timestamp"
 )
+# lineage rows per run: partition_id = xxhash64(doc_id) mod this
+LINEAGE_BUCKETS = 16
 
 
 def _read_or_empty(spark: SparkSession, path: str, schema: str) -> DataFrame:
@@ -80,6 +86,20 @@ def read_lineage(spark: SparkSession, checkpoint_dir: str, store=None) -> DataFr
     return _store(spark, checkpoint_dir, store).read("lineage", LINEAGE_SCHEMA)
 
 
+def read_committed(
+    spark: SparkSession, path: str, schema: str, checkpoint_dir: str
+) -> DataFrame:
+    """Committed-only view of the run-partitioned table at ``path``: rows
+    of ``run_id=`` directories whose run reached the checkpoint in
+    ``checkpoint_dir``. A directory left by a crash between its write and
+    its commit is invisible, so a retry never surfaces duplicate rows.
+    The committed-run set is one row per run — broadcast semi-join. A
+    path that does not exist yet is the empty typed relation."""
+    data = _read_or_empty(spark, path, schema)
+    committed = read_checkpoint(spark, checkpoint_dir).select("run_id").distinct()
+    return data.join(F.broadcast(committed), "run_id", "left_semi")
+
+
 def pending_docs(nested: DataFrame, checkpoint: DataFrame) -> DataFrame:
     """J5 resume anti-join: inputs minus completed docs. Duplicate
     doc_ids on the right of a ``left_anti`` cannot change its result, so
@@ -99,7 +119,6 @@ def commit_run(
     checkpoint_dir: str,
     run_id: str,
     doc_metrics: DataFrame,
-    n_partitions: int = 16,
     store=None,
 ) -> None:
     """Append per-doc checkpoint rows + per-partition lineage rollups.
@@ -123,7 +142,8 @@ def commit_run(
 
     lin = (
         doc_metrics.withColumn(
-            "partition_id", F.pmod(F.xxhash64("doc_id"), F.lit(n_partitions)).cast("int")
+            "partition_id",
+            F.pmod(F.xxhash64("doc_id"), F.lit(LINEAGE_BUCKETS)).cast("int"),
         )
         .groupBy("partition_id")
         .agg(

@@ -3,40 +3,20 @@
 The invariant checked against the reference is span-sequence equality
 (kind, text, media_ref, order) — reference analogue is the sorted merge of
 per-frame records back into per-video order (data/pytorch_dataset.py:472-478).
+The flagship orders spans in-row (``array_sort`` + ``posexplode`` in
+``pipeline.extract_spans``); this module rebuilds the nested shape.
 
-Two shapes:
-
-* :func:`reassemble_rows` — exploded ordered rows (doc_id, ord, kind, text,
-  media_ref). Preferred for downstream relational work and for the oracle
-  comparison (flat scalar columns hash portably).
-* :func:`reassemble_nested` — the contract-shaped nested array. For skewed
-  docs (one video, thousands of frames) it uses a **salted two-phase
-  collect_list**: partial collect per (doc_id, salt bucket), then flatten +
-  sort in a final per-doc pass — the shuffle fan-in per reducer key is
-  bounded by n_frames/SALT instead of n_frames (SURVEY.md §4).
+:func:`reassemble_nested` — the contract-shaped nested array. For skewed
+docs (one video, thousands of frames) it uses a **salted two-phase
+collect_list**: partial collect per (doc_id, salt bucket), then flatten +
+sort in a final per-doc pass — the shuffle fan-in per reducer key is
+bounded by n_frames/SALT instead of n_frames (SURVEY.md §4).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def reassemble_rows(
-    flat: DataFrame,
-    text_col: str = "text",
-    order_cols: list[str] | None = None,
-) -> DataFrame:
-    order_cols = order_cols or ["span_offset", "span_pos"]
-    w = Window.partitionBy("doc_id").orderBy(*[F.col(c) for c in order_cols])
-    return flat.select(
-        "doc_id",
-        (F.row_number().over(w) - 1).cast("int").alias("ord"),
-        "kind",
-        F.col(text_col).alias("text"),
-        "media_ref",
-        *[c for c in order_cols if c in flat.columns and c not in ("doc_id",)],
-    )
 
 
 def reassemble_nested(

@@ -18,13 +18,18 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .functions.cleanup import clean_ocr_col
-from .lineage import commit_run, pending_docs, read_checkpoint, run_committed
+from .lineage import (
+    commit_run,
+    pending_docs,
+    read_checkpoint,
+    read_committed,
+    run_committed,
+)
 from .operators.ocr import ocr_scalar_udf
-from .synth import explode_spans  # noqa: F401 (public re-export; used by bench)
 from .synth import synthetic_ocr_col
 
 
@@ -169,29 +174,38 @@ def run_extraction(
             "are still pending; pass a fresh run_id — overwriting a committed "
             "run's data directory would lose rows the checkpoint marks done"
         )
-    extracted = extract_spans(pending)
-
-    staged = run_path(output_dir, run_id)
-    n = write_counting_docs(extracted, staged)
+    n, metrics = stage_extraction(pending, run_path(output_dir, run_id))
     if n:
-        # schema given explicitly: no schema-inference job over the dir
-        metrics = doc_metrics(spark.read.schema(extracted.schema).parquet(staged))
         commit_run(spark, output_dir, run_id, metrics)
     return n
 
 
-def write_counting_docs(extracted: DataFrame, path: str) -> int:
-    """Overwrite ``path`` with ``extracted`` and return the number of
-    docs written, observed on the write itself: one ``ord = 0`` row per
-    doc with at least one span — the row count of :func:`doc_metrics`
-    over the written rows, without a job to count them. A doc with no
-    spans writes no row, is not counted and stays pending."""
+def stage_extraction(pending: DataFrame, staged: str) -> tuple[int, DataFrame]:
+    """Extract ``pending`` into the run directory ``staged`` (overwrite).
+    Returns the docs written and the lazy :func:`doc_metrics` of the
+    staged rows — O(this run), never a scan of the whole output history.
+    The one stage of :func:`run_extraction` and the extraction daemon."""
+    extracted = extract_spans(pending)
+    n = write_counting_docs(extracted, staged, F.col("ord") == 0)
+    # schema given explicitly: no schema-inference job over the dir
+    spark = pending.sparkSession
+    return n, doc_metrics(spark.read.schema(extracted.schema).parquet(staged))
+
+
+def write_counting_docs(df: DataFrame, path: str, doc_row: Column) -> int:
+    """Overwrite ``path`` with ``df`` and return the number of docs
+    written, observed on the write itself as the rows where ``doc_row``
+    holds — no job of its own counts them. For spans that is ``ord = 0``:
+    one row per doc with at least one span, the row count of
+    :func:`doc_metrics` over the written rows; a doc with no spans writes
+    no row, is not counted and stays pending. For a table with one row
+    per doc it is every row."""
     from pyspark.sql import Observation
 
     docs = Observation()
-    extracted.observe(
-        docs, F.count(F.when(F.col("ord") == 0, 1)).alias("docs")
-    ).write.mode("overwrite").parquet(path)
+    df.observe(docs, F.count(F.when(doc_row, 1)).alias("docs")).write.mode(
+        "overwrite"
+    ).parquet(path)
     return docs.get["docs"]
 
 
@@ -202,18 +216,9 @@ EXTRACTED_SCHEMA = (
 
 
 def read_extracted(spark: SparkSession, output_dir: str) -> DataFrame:
-    """Committed-only view of the extracted output: run directories whose
-    run_id never reached the checkpoint (crash between data write and
-    commit) are invisible, so retries can never surface duplicate rows.
-    The committed-run set is tiny (one id per run) — broadcast semi-join.
-    A not-yet-existing output dir (no runs, or only a dry-run) yields the
-    empty typed relation — same convention as the checkpoint readers."""
-    from .lineage import _read_or_empty
-
-    # the declared schema types the run_id= partition column as string,
-    # also for a numeric run_id
-    data = _read_or_empty(
-        spark, os.path.join(output_dir, "extracted"), EXTRACTED_SCHEMA
+    """Committed-only view of the extracted output. The declared schema
+    types the ``run_id=`` partition column as string, also for a numeric
+    run_id."""
+    return read_committed(
+        spark, os.path.join(output_dir, "extracted"), EXTRACTED_SCHEMA, output_dir
     )
-    committed = read_checkpoint(spark, output_dir).select("run_id").distinct()
-    return data.join(F.broadcast(committed), "run_id", "left_semi")

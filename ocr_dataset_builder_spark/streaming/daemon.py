@@ -1,70 +1,66 @@
-"""D1 — daemon mode as Structured Streaming.
+"""D1/D2 — the micro-batch commit protocol of the three streaming daemons.
 
 Reference: an infinite loop that re-lists the input dir every
 ``watch_interval_seconds`` (default 300 s), diffs against the checkpoint
-log, and processes new directories
-(video/frame_pipeline.py:437-522 and duplicates). There is no true event
-stream — it is incremental batch over a growing file set.
-
-Rebuild, two equivalent modes:
-
-* :func:`watch_available_now` — Structured Streaming file source over the
-  nested-documents parquet directory with ``trigger(availableNow=True)``
-  + ``foreachBatch``: Spark's checkpoint tracks consumed files, each
-  invocation processes exactly the new ones, then exits. A daemon is this
-  in a scheduler loop — or the same code with
-  ``trigger(processingTime='300 seconds')``.
-* :func:`daemon_pass` — the reference's literal semantics: relist + J5
-  anti-join against the lineage checkpoint (pipeline.run_extraction
-  already is that), per pass.
+log, and processes new directories (video/frame_pipeline.py:437-522 and
+duplicates) — incremental batch over a growing file set. Rebuild: a
+Structured Streaming file source + ``foreachBatch``; Spark's stream
+checkpoint tracks consumed files. :func:`stream_writer` is the one stream
+setup and :func:`batch_body` the one micro-batch body, shared with
+``dedup_daemon`` and ``semantic_daemon``; each daemon supplies only a
+``stage(batch_df, batch_run) -> (n, metrics)``. The extraction daemon
+runs with ``trigger(availableNow=True)`` (:func:`watch_available_now`, a
+daemon in a scheduler loop) or ``trigger(processingTime=...)``
+(:func:`watch_continuous`, the reference's watch loop).
 
 Delivery: at-least-once with idempotent commit (D2 — the reference's
-"checkpoint only after full success"). Each micro-batch stages its data
-under a run-scoped ``run_id=`` directory with mode=overwrite, so a
-re-delivered batch REPLACES its own previous partial output instead of
-appending duplicates; a crash between the data write and the checkpoint
-commit leaves an orphan run dir that ``pipeline.read_extracted`` hides
-from readers (committed run_ids only). No watermarks/event-time: the
-reference has none (D3); batching is count-based (A2), not time-based.
+"checkpoint only after full success"). Batch ``<prefix>-b<id>`` returns
+on an empty batch; returns before any read or write when its run id is
+already in the lineage checkpoint (a re-delivery after its commit, or a
+manual replay); stages its outputs under run-scoped ``run_id=``
+directories with mode=overwrite, so a retry of an uncommitted batch
+replaces its own partial output; and commits the checkpoint LAST when it
+staged any doc. Readers see only committed runs
+(``lineage.read_committed``), and since the guard runs first a batch's
+own delta is never in a committed view while it runs. No
+watermarks/event-time: the reference has none (D3); batching is
+count-based (A2), not time-based.
 """
 
 from __future__ import annotations
 
 import os
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..pipeline import extract_spans, doc_metrics, run_path, write_counting_docs
 from ..lineage import commit_run, read_checkpoint, run_committed
+from ..pipeline import run_path, stage_extraction
 
 NESTED_SCHEMA = (
     "doc_id string, "
     "spans array<struct<kind:string,text:string,media_ref:string,offset:int>>"
 )
 
+# stage(batch_df, batch_run) -> (docs staged, lazy per-doc metrics)
+Stage = Callable[[DataFrame, str], tuple[int, DataFrame]]
 
-def _batch_processor(output_dir: str, run_id: str, processed: dict):
-    """The shared foreachBatch body: run-scoped overwrite staging +
-    checkpoint-last commit (D2). Re-delivery of a batch_id replaces its
-    own output (idempotent); metrics read ONLY the staged dir — O(batch),
-    never a rescan of the whole output history."""
+
+def batch_body(output_dir: str, prefix: str, stage: Stage, processed: dict):
+    """The foreachBatch body: empty probe, committed-run guard, ``stage``,
+    then ``commit_run`` when the stage wrote any doc. ``processed["n"]``
+    counts the docs committed."""
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
         spark = batch_df.sparkSession
-        batch_run_id = f"{run_id}-b{batch_id}"
-        staged = run_path(output_dir, batch_run_id)
-        extracted = extract_spans(batch_df)
-        n = write_counting_docs(extracted, staged)
-        # a batch re-delivered AFTER its commit (crash between commit and
-        # the stream-checkpoint write) recomputes + overwrites its staging
-        # (repairing any partial overwrite) but must not re-append the
-        # checkpoint rows — a duplicate set double-counts the run for
-        # lineage readers
-        if n and not run_committed(read_checkpoint(spark, output_dir), batch_run_id):
-            metrics = doc_metrics(spark.read.schema(extracted.schema).parquet(staged))
-            commit_run(spark, output_dir, batch_run_id, metrics)
+        batch_run = f"{prefix}-b{batch_id}"
+        if run_committed(read_checkpoint(spark, output_dir), batch_run):
+            return
+        n, metrics = stage(batch_df, batch_run)
+        if n:
+            commit_run(spark, output_dir, batch_run, metrics)
             processed["n"] += n
 
     return _process
@@ -135,17 +131,53 @@ def _checkpoint_run_prefix(checkpoint_dir: str, run_id: str) -> str:
     return run_id
 
 
-def _watch_stream(spark: SparkSession, input_dir: str, output_dir: str, run_id: str):
+def stream_writer(
+    spark: SparkSession,
+    input_dir: str,
+    schema: str,
+    output_dir: str,
+    run_id: str,
+    stage: Stage,
+):
+    """The stream over ``input_dir`` with :func:`batch_body` attached and
+    its checkpoint at ``<output_dir>/_stream_checkpoint``; the caller sets
+    the trigger. Returns ``(DataStreamWriter, processed_counter)``."""
     processed = {"n": 0}
     checkpoint_dir = os.path.join(output_dir, "_stream_checkpoint")
     prefix = _checkpoint_run_prefix(checkpoint_dir, run_id)
     writer = (
-        spark.readStream.schema(NESTED_SCHEMA)
+        spark.readStream.schema(schema)
         .parquet(input_dir)
-        .writeStream.foreachBatch(_batch_processor(output_dir, prefix, processed))
+        .writeStream.foreachBatch(batch_body(output_dir, prefix, stage, processed))
         .option("checkpointLocation", checkpoint_dir)
     )
     return writer, processed
+
+
+def drain(
+    spark: SparkSession,
+    input_dir: str,
+    schema: str,
+    output_dir: str,
+    run_id: str,
+    stage: Stage,
+) -> int:
+    """Run :func:`stream_writer` with ``trigger(availableNow=True)``:
+    process all not-yet-consumed input files, then stop. Returns the
+    number of docs committed."""
+    writer, processed = stream_writer(
+        spark, input_dir, schema, output_dir, run_id, stage
+    )
+    writer.trigger(availableNow=True).start().awaitTermination()
+    return processed["n"]
+
+
+def extraction_stage(output_dir: str) -> Stage:
+    """The extraction daemon's stage: ``pipeline.stage_extraction`` into
+    ``<output_dir>/extracted/run_id=<batch_run>``."""
+    return lambda batch_df, batch_run: stage_extraction(
+        batch_df, run_path(output_dir, batch_run)
+    )
 
 
 def watch_available_now(
@@ -154,12 +186,12 @@ def watch_available_now(
     output_dir: str,
     run_id: str = "stream0",
 ) -> int:
-    """Process all not-yet-consumed input files, then stop. Returns the
+    """Extract all not-yet-consumed input files, then stop. Returns the
     number of docs processed in this invocation."""
-    writer, processed = _watch_stream(spark, input_dir, output_dir, run_id)
-    stream = writer.trigger(availableNow=True).start()
-    stream.awaitTermination()
-    return processed["n"]
+    return drain(
+        spark, input_dir, NESTED_SCHEMA, output_dir, run_id,
+        extraction_stage(output_dir),
+    )
 
 
 def watch_continuous(
@@ -180,17 +212,9 @@ def watch_continuous(
     the stream checkpoint, so a deployment can stop the daemon and drain
     the backlog with an availableNow pass, or vice versa, without ever
     double-processing a file."""
-    writer, processed = _watch_stream(spark, input_dir, output_dir, run_id)
+    writer, processed = stream_writer(
+        spark, input_dir, NESTED_SCHEMA, output_dir, run_id,
+        extraction_stage(output_dir),
+    )
     query = writer.trigger(processingTime=interval).start()
     return query, processed
-
-
-def daemon_pass(
-    spark: SparkSession, nested: DataFrame, output_dir: str, run_id: str
-) -> int:
-    """One reference-style daemon pass: relist + anti-join + process.
-    (The reference sleeps watch_interval_seconds between passes; a
-    scheduler does that here.)"""
-    from ..pipeline import run_extraction
-
-    return run_extraction(spark, nested, output_dir, run_id=run_id)

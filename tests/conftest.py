@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -56,3 +57,30 @@ def assert_same_rows(spark_df, duck_rel, ndigits: int = 6):
     assert len(s) == len(d), f"row count mismatch: spark={len(s)} duck={len(d)}"
     for i, (a, b) in enumerate(zip(s, d)):
         assert a == b, f"row {i} mismatch:\n  spark={a!r}\n  duck ={b!r}"
+
+
+def file_stamps(*roots: str) -> dict[str, tuple[int, int]]:
+    """Every file under ``roots`` with its (size, mtime_ns)."""
+    out = {}
+    for root in roots:
+        for d, _, names in os.walk(root):
+            for name in names:
+                st = os.stat(os.path.join(d, name))
+                out[os.path.join(d, name)] = (st.st_size, st.st_mtime_ns)
+    return out
+
+
+def jobs_of(spark, fn):
+    """(fn(), number of Spark jobs fn ran), counted under a job group of
+    its own once the listener bus has delivered every job event."""
+    sc = spark.sparkContext
+    group = f"budget-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job budget")
+    try:
+        result = fn()
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return result, len(sc.statusTracker().getJobIdsForGroup(group))

@@ -1,6 +1,7 @@
 """Streaming incremental dedup (streaming/dedup_daemon.py): two
 availableNow passes where pass 2 is deduped against pass 1's committed
-fingerprint index, plus replay idempotence of a committed batch."""
+fingerprint index, plus a replay of committed batches through the shared
+micro-batch body that writes nothing."""
 
 from __future__ import annotations
 
@@ -10,9 +11,11 @@ import tempfile
 
 from pyspark.sql import functions as F
 
+from conftest import file_stamps, jobs_of
+
 from ocr_dataset_builder_spark.streaming.dedup_daemon import (
     DOCS_SCHEMA,
-    _dedup_batch_processor,
+    dedup_stage,
     read_deduped,
     read_index,
     watch_dedup_available_now,
@@ -90,11 +93,13 @@ def test_dedup_daemon_incremental_and_replay(spark):
         idx2 = {r["fp"]: r["n_occ"] for r in read_index(spark, idx_dir, out_dir).collect()}
         assert idx2 == idx1
 
-        # replay a COMMITTED batch (crash between commit_run and the
-        # stream-checkpoint write): the processor must exclude its own
-        # delta from the index read and recompute identical outputs
+        # replay COMMITTED batches (crash between commit_run and the
+        # stream-checkpoint write): the committed-run guard returns
+        # before any read or write, so a batch never dedups against its
+        # own fingerprints
         from ocr_dataset_builder_spark.streaming.daemon import (
             _checkpoint_run_prefix,
+            batch_body,
         )
 
         before_rows = sorted(
@@ -111,12 +116,24 @@ def test_dedup_daemon_incremental_and_replay(spark):
             for r in read_checkpoint(spark, out_dir).collect()
         )
         replay_counter = {"n": 0}
-        proc = _dedup_batch_processor(
-            out_dir, idx_dir, prefix, replay_counter, _SUBSTR_W
+        proc = batch_body(
+            out_dir, prefix, dedup_stage(out_dir, idx_dir, _SUBSTR_W),
+            replay_counter,
         )
-        # batch 0 was day 1 (first availableNow pass), batch 1 day 2
-        proc(spark.createDataFrame(_DAY1, DOCS_SCHEMA), 0)
-        proc(spark.createDataFrame(_DAY2, DOCS_SCHEMA), 1)
+        day1 = spark.createDataFrame(_DAY1, DOCS_SCHEMA)
+        day2 = spark.createDataFrame(_DAY2, DOCS_SCHEMA)
+        stamps_before = file_stamps(out_dir, idx_dir)
+
+        def _replay():
+            # batch 0 was day 1 (first availableNow pass), batch 1 day 2
+            proc(day1, 0)
+            proc(day2, 1)
+
+        _, jobs = jobs_of(spark, _replay)
+        # zero file churn, and no job beyond each batch's empty and
+        # committed-run probes
+        assert file_stamps(out_dir, idx_dir) == stamps_before
+        assert jobs <= 4, f"replay ran {jobs} Spark jobs, the probes are 4"
         after_rows = sorted(
             map(tuple, read_deduped(spark, out_dir).drop("run_id").collect())
         )

@@ -1,22 +1,22 @@
 """Every top-level ``def`` and ``class`` of the package is referenced.
 
-A name counts as referenced when some ``.py`` file of the repo mentions
-it as a whole word outside the lines of its own definition (decorators
-included). ``plans/`` and ``perfbench/.work/`` hold generated files and
-are not searched, nor are hidden directories (``.git``, a ``.venv``).
+A name counts as referenced when some ``.py`` file of the repo uses it
+in code outside its own definition (decorators included): as a ``Name``,
+as an ``Attribute`` or in an import. A mention in a docstring, a comment
+or a plain string does not count; an f-string's expressions do.
+``plans/`` and ``perfbench/.work/`` hold generated files and are not
+searched, nor are hidden directories (``.git``, a ``.venv``).
 """
 
 from __future__ import annotations
 
 import ast
 import os
-import re
 from collections import Counter
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PACKAGE = os.path.join(ROOT, "ocr_dataset_builder_spark")
 EXCLUDED = {os.path.join(ROOT, "plans"), os.path.join(ROOT, "perfbench", ".work")}
-WORD = re.compile(r"\w+")
 
 
 def _py_files(top: str) -> list[str]:
@@ -30,22 +30,35 @@ def _py_files(top: str) -> list[str]:
     return sorted(out)
 
 
+def _parse(path: str) -> ast.Module:
+    with open(path, encoding="utf-8") as f:
+        return ast.parse(f.read(), path)
+
+
+def _references(tree: ast.AST) -> Counter[str]:
+    """Names ``tree`` uses in code: loaded or stored names, attribute
+    names, and the names an import binds or reads."""
+    refs: Counter[str] = Counter()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Name):
+            refs[node.id] += 1
+        elif isinstance(node, ast.Attribute):
+            refs[node.attr] += 1
+        elif isinstance(node, ast.alias):
+            refs.update(node.name.split("."))
+    return refs
+
+
 def test_no_unreferenced_top_level_defs():
-    words: Counter[str] = Counter()
+    refs: Counter[str] = Counter()
     for path in _py_files(ROOT):
-        with open(path, encoding="utf-8") as f:
-            words.update(WORD.findall(f.read()))
+        refs.update(_references(_parse(path)))
 
     dead = []
     for path in _py_files(PACKAGE):
-        with open(path, encoding="utf-8") as f:
-            src = f.read()
-        lines = src.splitlines()
-        for node in ast.parse(src, path).body:
+        for node in _parse(path).body:
             if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
                 continue
-            first = min([node.lineno] + [d.lineno for d in node.decorator_list])
-            own = WORD.findall("\n".join(lines[first - 1 : node.end_lineno]))
-            if words[node.name] - own.count(node.name) <= 0:
+            if refs[node.name] - _references(node)[node.name] <= 0:
                 dead.append(f"{os.path.relpath(path, ROOT)}:{node.lineno} {node.name}")
     assert not dead, "unreferenced top-level definitions:\n" + "\n".join(dead)

@@ -9,11 +9,12 @@ from __future__ import annotations
 import os
 import shutil
 import tempfile
-import uuid
 
 import duckdb
 import pytest
 from pyspark.sql import functions as F
+
+from conftest import file_stamps, jobs_of
 
 from ocr_dataset_builder_spark import synth
 from ocr_dataset_builder_spark.functions.cleanup import clean_ocr_text
@@ -212,32 +213,6 @@ def test_read_extracted_empty_before_any_run(spark):
         shutil.rmtree(out, ignore_errors=True)
 
 
-def _files(root: str) -> dict[str, tuple[int, int]]:
-    """Every file under ``root`` with its (size, mtime_ns)."""
-    out = {}
-    for d, _, names in os.walk(root):
-        for name in names:
-            st = os.stat(os.path.join(d, name))
-            out[os.path.join(d, name)] = (st.st_size, st.st_mtime_ns)
-    return out
-
-
-def _jobs_of(spark, fn):
-    """(fn(), number of Spark jobs fn ran), counted under a job group of
-    its own once the listener bus has delivered every job event."""
-    sc = spark.sparkContext
-    group = f"budget-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "job budget")
-    try:
-        result = fn()
-    finally:
-        for key in ("spark.jobGroup.id", "spark.job.description",
-                    "spark.job.interruptOnCancel"):
-            sc.setLocalProperty(key, None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return result, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_resume_job_budget(spark, sf_dir):
     """A resume with pending docs runs at most 10 Spark jobs: pending
     probe 2 (checkpoint broadcast + isEmpty), committed-run guard 1,
@@ -249,15 +224,15 @@ def test_resume_job_budget(spark, sf_dir):
     out = tempfile.mkdtemp(prefix="odb_budget_")
     try:
         run_extraction(spark, half, out, run_id="r1")
-        n, jobs = _jobs_of(
+        n, jobs = jobs_of(
             spark, lambda: run_extraction(spark, nested, out, run_id="r2")
         )
         assert n > 0
         assert jobs <= 10, f"resume ran {jobs} Spark jobs, budget is 10"
 
-        before = _files(out)
+        before = file_stamps(out)
         assert run_extraction(spark, nested, out, run_id="r3") == 0
-        assert _files(out) == before
+        assert file_stamps(out) == before
     finally:
         shutil.rmtree(out, ignore_errors=True)
 

@@ -10,6 +10,8 @@ import tempfile
 
 from pyspark.sql import functions as F
 
+from conftest import file_stamps, jobs_of
+
 from ocr_dataset_builder_spark import synth
 from ocr_dataset_builder_spark.operators.refinement import (
     assemble_batch,
@@ -122,6 +124,44 @@ def test_streaming_daemon_incremental(spark, sf_dir):
 
         extracted = spark.read.parquet(f"{out_dir}/extracted")
         assert extracted.select("doc_id").distinct().count() == n1 + n2
+    finally:
+        shutil.rmtree(in_dir, ignore_errors=True)
+        shutil.rmtree(out_dir, ignore_errors=True)
+
+
+def test_streaming_daemon_replay_is_a_noop(spark, sf_dir):
+    """Replaying a committed batch through the shared micro-batch body
+    (crash between commit_run and the stream-checkpoint write) returns at
+    the committed-run guard: no file under the output dir changes,
+    nothing is counted, and no job runs beyond the empty and
+    committed-run probes."""
+    from ocr_dataset_builder_spark.streaming.daemon import (
+        NESTED_SCHEMA,
+        _checkpoint_run_prefix,
+        batch_body,
+        extraction_stage,
+        watch_available_now,
+    )
+
+    nested = synth.documents_spans(spark, sf_dir)
+    in_dir = tempfile.mkdtemp(prefix="odb_replay_in_")
+    out_dir = tempfile.mkdtemp(prefix="odb_replay_out_")
+    try:
+        nested.write.mode("append").parquet(in_dir)
+        assert watch_available_now(spark, in_dir, out_dir) == nested.count()
+
+        prefix = _checkpoint_run_prefix(
+            os.path.join(out_dir, "_stream_checkpoint"), "ignored"
+        )
+        counter = {"n": 0}
+        body = batch_body(out_dir, prefix, extraction_stage(out_dir), counter)
+        # the one availableNow pass consumed every input file as batch 0
+        batch = spark.read.schema(NESTED_SCHEMA).parquet(in_dir)
+        before = file_stamps(out_dir)
+        _, jobs = jobs_of(spark, lambda: body(batch, 0))
+        assert file_stamps(out_dir) == before
+        assert counter["n"] == 0
+        assert jobs <= 2, f"replay ran {jobs} Spark jobs, the probes are 2"
     finally:
         shutil.rmtree(in_dir, ignore_errors=True)
         shutil.rmtree(out_dir, ignore_errors=True)

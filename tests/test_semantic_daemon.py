@@ -1,7 +1,8 @@
 """Streaming incremental SEMANTIC dedup (streaming/semantic_daemon.py):
 two availableNow passes where pass 2 is deduped against pass 1's
-committed kept-store, plus replay idempotence of a committed batch —
-the embedding twin of test_dedup_daemon.
+committed kept-store, plus a replay of committed batches through the
+shared micro-batch body that writes nothing — the embedding twin of
+test_dedup_daemon.
 """
 
 from __future__ import annotations
@@ -10,12 +11,14 @@ import os
 import shutil
 import tempfile
 
+from conftest import jobs_of
+
 from ocr_dataset_builder_spark.streaming.semantic_daemon import (
     EMB_SCHEMA,
-    _semantic_batch_processor,
     build_semantic_centroids,
     read_kept_store,
     read_verdicts,
+    semantic_stage,
     watch_semantic_available_now,
 )
 
@@ -105,11 +108,12 @@ def test_semantic_daemon_incremental_and_replay(spark):
         assert kept2 == {101, 102, 201, 202}
 
         # replay COMMITTED batches (crash between commit_run and the
-        # stream-checkpoint write): own-delta exclusion must make the
-        # recompute byte-identical and the commit a no-op
+        # stream-checkpoint write): the committed-run guard must make
+        # each replay a no-op
         from ocr_dataset_builder_spark.lineage import read_checkpoint
         from ocr_dataset_builder_spark.streaming.daemon import (
             _checkpoint_run_prefix,
+            batch_body,
         )
 
         before = sorted(
@@ -123,8 +127,8 @@ def test_semantic_daemon_incremental_and_replay(spark):
             os.path.join(out_dir, "_stream_checkpoint"), "ignored"
         )
         counter = {"n": 0}
-        proc = _semantic_batch_processor(
-            out_dir, store_dir, cent_dir, prefix, counter
+        proc = batch_body(
+            out_dir, prefix, semantic_stage(out_dir, store_dir, cent_dir), counter
         )
         # the committed-batch guard must short-circuit BEFORE any write
         # (ADVICE r6: an out-of-order replay of b0 after b1's keeps
@@ -141,9 +145,17 @@ def test_semantic_daemon_incremental_and_replay(spark):
             return out
 
         mt_before = _mtimes()
-        proc(spark.createDataFrame(_DAY1, EMB_SCHEMA), 0)
-        proc(spark.createDataFrame(_DAY2, EMB_SCHEMA), 1)
+        day1 = spark.createDataFrame(_DAY1, EMB_SCHEMA)
+        day2 = spark.createDataFrame(_DAY2, EMB_SCHEMA)
+
+        def _replay():
+            proc(day1, 0)
+            proc(day2, 1)
+
+        _, jobs = jobs_of(spark, _replay)
         assert _mtimes() == mt_before
+        # no job beyond each batch's empty and committed-run probes
+        assert jobs <= 4, f"replay ran {jobs} Spark jobs, the probes are 4"
         after = sorted(
             map(tuple, read_verdicts(spark, out_dir).drop("run_id").collect())
         )
