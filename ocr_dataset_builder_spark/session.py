@@ -10,6 +10,12 @@ sandbox runs local[N]):
   cluster set it ~2-3x total cores — AQE coalesces the excess.
 * Arrow is enabled for the vectorized UDF boundary; batch size bounded so
   a skewed group never materializes more than ~10k rows per Arrow batch.
+* The generated-code cache holds ``CODEGEN_CACHE_ENTRIES`` classes, not
+  Spark's default 100. The cache is one LRU per JVM, and one
+  ``corpus_prep_final`` call's working set is 220–246 classes, so at 100
+  entries every warm call Janino-compiled its whole set again (244
+  classes per call on the sf0.001 fixture, 219 per perfbench
+  ``corpus_prep`` sample). At 1000 a warm call compiles 0–6.
 """
 
 from __future__ import annotations
@@ -17,6 +23,20 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# Size of Spark's generated-code cache (spark.sql.codegen.cache.maxEntries,
+# default 100). Spark builds the cache once per JVM, in CodeGenerator$'s
+# static initializer, so this is a static conf set before the session
+# starts. Census on sf0.001, classes compiled by the first/second call of
+# each registered query at the default size (CodegenMetrics compilation
+# count): corpus_prep_final 244/246, corpus_prep_budget 120/119,
+# corpus_prep_substr_text 112/117 and corpus_prep_substr 82/54 recompile
+# their whole working set on every warm call; semantic_dedup_incremental
+# 99/62, dedup_best_of_cluster 96/59 and semantic_dedup_incremental_stats
+# 69/69 recompile part of it. All 126 second calls together compile 816
+# classes at the default size and 54 at 10k entries. 1000 is about 4x the
+# largest call's 246.
+CODEGEN_CACHE_ENTRIES = 1000
 
 
 def get_spark(
@@ -53,6 +73,7 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     # Pin BLAS to one thread inside executor Python workers. The arrow
     # GEMM kernels (queries_corpus backend="arrow") get their parallelism

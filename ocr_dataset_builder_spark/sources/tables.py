@@ -13,17 +13,22 @@ from __future__ import annotations
 
 import os
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 
 
 def iceberg_catalog_available(spark: SparkSession) -> bool:
-    """True when the Iceberg Spark runtime is on the JVM classpath."""
+    """True when the Iceberg Spark runtime is on the JVM classpath, False
+    when the JVM reports its catalog class missing. Any other failure (a
+    py4j gateway fault, ...) raises: it says nothing about the classpath."""
     try:
         spark.sparkContext._jvm.java.lang.Class.forName(
             "org.apache.iceberg.spark.SparkCatalog"
         )
         return True
-    except Exception:
+    except Py4JJavaError as e:
+        if e.java_exception.getClass().getName() != "java.lang.ClassNotFoundException":
+            raise
         return False
 
 

@@ -1,4 +1,4 @@
-"""Spark jobs and wall time of one warm call of a registered query, per site.
+"""Jobs, compiled classes and wall time of one warm query call, per site.
 
     python scripts/job_census.py <query> [sf_dir]
 
@@ -18,7 +18,11 @@ generation), then once more under the census and prints, per site:
 
 Each site runs under its own Spark job group, and jobs are counted after
 the listener bus has drained, the same way ``perfbench`` counts jobs per
-sample. ``sf_dir`` defaults to the one ``scripts/crosscheck.py`` uses.
+sample. ``compiles`` counts the generated classes Janino compiled while
+the site ran (Spark's ``CodegenMetrics`` compilation count, one counter
+per JVM): a warm call whose working set fits the generated-code cache
+compiles next to none. ``sf_dir`` defaults to the one
+``scripts/crosscheck.py`` uses.
 """
 
 from __future__ import annotations
@@ -34,6 +38,12 @@ sys.path.insert(0, os.path.dirname(HERE))
 PKG = os.path.join(os.path.dirname(HERE), "ocr_dataset_builder_spark")
 
 ACTIONS = ("collect", "count", "take", "head", "first", "isEmpty", "toPandas")
+
+
+def compiled(sc) -> int:
+    """Generated classes compiled so far in this JVM."""
+    metrics = sc._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
 
 
 def _caller_site(skip: tuple[str, ...] = ()) -> str:
@@ -54,6 +64,7 @@ class Census:
         self.groups: list[tuple[str, str]] = []  # (group id, site)
         self.wall: dict[str, float] = defaultdict(float)
         self.calls: dict[str, int] = defaultdict(int)
+        self.compiles: dict[str, int] = defaultdict(int)
         self._undo: list = []
         self._depth = 0  # a wrapped call inside another keeps the outer site
 
@@ -74,11 +85,13 @@ class Census:
             census.sc.setJobGroup(census._group(site), site)
             census._depth += 1
             t = time.perf_counter()
+            c = compiled(census.sc)
             try:
                 return orig(*a, **kw)
             finally:
                 census._depth -= 1
                 census.wall[site] += time.perf_counter() - t
+                census.compiles[site] += compiled(census.sc) - c
                 census.calls[site] += 1
                 census.sc.setJobGroup(prev or "census-idle", "census")
 
@@ -147,29 +160,36 @@ def main() -> int:
     census.install()
     try:
         sc.setJobGroup(census._group("build (driver)"), "build")
-        t0 = time.perf_counter()
+        t0, c0 = time.perf_counter(), compiled(sc)
         df = fn(spark, sf_dir)
-        t1 = time.perf_counter()
+        t1, c1 = time.perf_counter(), compiled(sc)
     finally:
         census.uninstall()
     sc.setJobGroup(census._group("final action (noop write)"), "final action")
     df.write.format("noop").mode("overwrite").save()
-    t2 = time.perf_counter()
+    t2, c2 = time.perf_counter(), compiled(sc)
     sc.setJobGroup("census-idle", "census")
-    inside = sum(census.wall.values())
-    census.wall["build (driver)"] = (t1 - t0) - inside
+    census.wall["build (driver)"] = (t1 - t0) - sum(census.wall.values())
+    census.compiles["build (driver)"] = (c1 - c0) - sum(census.compiles.values())
     census.calls["build (driver)"] = 1
     census.wall["final action (noop write)"] = t2 - t1
+    census.compiles["final action (noop write)"] = c2 - c1
     census.calls["final action (noop write)"] = 1
     jobs = census.jobs()
 
     seen = list(dict.fromkeys(site for _, site in census.groups))
     w = max(len(s) for s in seen)
     print(f"query {name} over {sf_dir}; warm-up call {warm:.2f} s")
-    print(f"{'site':<{w}}  calls  jobs  wall_s")
+    print(f"{'site':<{w}}  calls  jobs  compiles  wall_s")
     for s in seen:
-        print(f"{s:<{w}}  {census.calls[s]:>5}  {jobs[s]:>4}  {census.wall[s]:6.2f}")
-    print(f"{'total':<{w}}  {'':>5}  {sum(jobs.values()):>4}  {t2 - t0:6.2f}")
+        print(
+            f"{s:<{w}}  {census.calls[s]:>5}  {jobs[s]:>4}"
+            f"  {census.compiles[s]:>8}  {census.wall[s]:6.2f}"
+        )
+    print(
+        f"{'total':<{w}}  {'':>5}  {sum(jobs.values()):>4}"
+        f"  {c2 - c0:>8}  {t2 - t0:6.2f}"
+    )
     spark.stop()
     return 0
 

@@ -33,6 +33,7 @@ from ocr_dataset_builder_spark.queries_quality import (
     q_decontaminate,
 )
 from ocr_dataset_builder_spark.queries_substr import _SUBSTR_W
+from ocr_dataset_builder_spark.session import CODEGEN_CACHE_ENTRIES
 
 
 def _hex15_py(s: str) -> int:
@@ -288,3 +289,30 @@ def test_corpus_prep_job_budget(spark, sf_dir):
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     jobs = len(sc.statusTracker().getJobIdsForGroup(group))
     assert 0 < jobs <= _JOB_BUDGET, jobs
+
+
+def _compiled(spark) -> int:
+    """Generated classes Janino compiled so far in this JVM."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
+def test_warm_call_reuses_generated_code(spark, sf_dir):
+    """A warm call compiles (next to) no generated class: its 220-250
+    classes fit the session's generated-code cache. At Spark's default of
+    100 entries the LRU evicts each class before the next call reuses it,
+    and every call compiled all 244 again."""
+    entries = spark.conf.get("spark.sql.codegen.cache.maxEntries")
+    assert entries == str(CODEGEN_CACHE_ENTRIES)
+
+    def call():
+        q_corpus_prep_final(spark, sf_dir).write.format("noop").mode(
+            "overwrite"
+        ).save()
+        spark.catalog.clearCache()
+
+    call()
+    before = _compiled(spark)
+    call()
+    compiled = _compiled(spark) - before
+    assert compiled <= 20, compiled

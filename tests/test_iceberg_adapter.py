@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import shutil
 import tempfile
+from types import SimpleNamespace
 
 import pytest
 
@@ -55,6 +56,20 @@ def test_iceberg_store_requires_runtime(spark):
         pytest.skip("Iceberg runtime present; covered by the roundtrip test")
     with pytest.raises(RuntimeError, match="Iceberg"):
         IcebergStore(spark, "odb_it.db")
+
+
+def test_iceberg_probe_raises_on_a_gateway_fault():
+    """Only a missing catalog class means "no Iceberg"; any other failure
+    of the probe propagates instead of turning the Iceberg path off."""
+
+    def for_name(_cls):
+        raise RuntimeError("py4j gateway fault")
+
+    lang = SimpleNamespace(Class=SimpleNamespace(forName=for_name))
+    jvm = SimpleNamespace(java=SimpleNamespace(lang=lang))
+    session = SimpleNamespace(sparkContext=SimpleNamespace(_jvm=jvm))
+    with pytest.raises(RuntimeError, match="gateway"):
+        iceberg_catalog_available(session)
 
 
 def test_iceberg_store_roundtrip(spark):
