@@ -13,9 +13,9 @@ sandbox runs local[N]):
 * The generated-code cache holds ``CODEGEN_CACHE_ENTRIES`` classes, not
   Spark's default 100. The cache is one LRU per JVM, and one
   ``corpus_prep_final`` call's working set is 220–246 classes, so at 100
-  entries every warm call Janino-compiled its whole set again (244
-  classes per call on the sf0.001 fixture, 219 per perfbench
-  ``corpus_prep`` sample). At 1000 a warm call compiles 0–6.
+  entries every warm call Janino-compiled its whole set again (245
+  classes per call on the sf0.001 fixture). At 1000 a warm call
+  compiles 0–6.
 """
 
 from __future__ import annotations
@@ -28,14 +28,14 @@ from pyspark.sql import SparkSession
 # default 100). Spark builds the cache once per JVM, in CodeGenerator$'s
 # static initializer, so this is a static conf set before the session
 # starts. Census on sf0.001, classes compiled by the first/second call of
-# each registered query at the default size (CodegenMetrics compilation
-# count): corpus_prep_final 244/246, corpus_prep_budget 120/119,
-# corpus_prep_substr_text 112/117 and corpus_prep_substr 82/54 recompile
-# their whole working set on every warm call; semantic_dedup_incremental
-# 99/62, dedup_best_of_cluster 96/59 and semantic_dedup_incremental_stats
-# 69/69 recompile part of it. All 126 second calls together compile 816
-# classes at the default size and 54 at 10k entries. 1000 is about 4x the
-# largest call's 246.
+# each registered query in registry order at the default size
+# (CodegenMetrics compilation count): corpus_prep_final 245/245,
+# corpus_prep_budget 121/111, corpus_prep_substr_text 110/117 and
+# corpus_prep_substr 84/89 recompile their whole working set on every warm
+# call; semantic_dedup_incremental 99/55, dedup_best_of_cluster 93/37 and
+# semantic_dedup_incremental_stats 56/58 recompile part of it. All 126
+# second calls together compile 734 classes at the default size and 71 at
+# 10k entries. 1000 is about 4x the largest call's 245.
 CODEGEN_CACHE_ENTRIES = 1000
 
 

@@ -301,7 +301,7 @@ def test_warm_call_reuses_generated_code(spark, sf_dir):
     """A warm call compiles (next to) no generated class: its 220-250
     classes fit the session's generated-code cache. At Spark's default of
     100 entries the LRU evicts each class before the next call reuses it,
-    and every call compiled all 244 again."""
+    and every call compiled about 245 again."""
     entries = spark.conf.get("spark.sql.codegen.cache.maxEntries")
     assert entries == str(CODEGEN_CACHE_ENTRIES)
 
